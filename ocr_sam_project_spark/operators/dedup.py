@@ -26,11 +26,15 @@ DuckDB oracle; swap hash64 -> F.xxhash64 for raw speed at production scale
 
 from __future__ import annotations
 
+import struct
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .skew import spread_scan
 from .textstats import hash64, normalize_for_fingerprint
+
+_U64 = (1 << 64) - 1
 
 N_HASHES = 16
 N_BANDS = 4  # rows per band r = N_HASHES / N_BANDS = 4
@@ -885,10 +889,11 @@ def bloom_build(
     filter size, not the store size), BIT_OR the single-bit masks, collect.
     The collect is bounded metadata (m_bits/64 longs — same contract as
     kmeans' k x dim centroid collect), NOT corpus data: m_bits = 2^20 is
-    16 K longs.  Sizing: ~10 bits per stored fp gives ~1% FP at k=4-7, so
-    the literal path serves stores up to ~10^7 fps (m = 2^27, a 16 MB
-    broadcast literal); beyond that use bloom_hit_arrow's numpy-broadcast
-    path."""
+    16 K longs.  Sizing: ~10 bits per stored fp gives ~1% FP at k=4-7.
+    bloom_hit ships the bitset as one m_bits/8-byte binary literal inside
+    every task's plan, so it suits filters up to a few MB (m ~ 2^24, ~10^6
+    stored fps); a bigger bitset belongs in bloom_probe_arrow, which ships
+    it once per executor as a broadcast."""
     n_words = (m_bits + 63) // 64
     rows = (
         fp_store.select(
@@ -909,26 +914,32 @@ def bloom_build(
 
 
 def bloom_hit(fp: Column, words: list[int], m_bits: int, k: int) -> Column:
-    """Boolean column: all k positions set in the bitset — pure codegen
-    (literal array + element_at + bit math), no join, no Python, no
-    shuffle.  False negatives impossible by construction."""
-    lit_words = F.lit(words).cast("array<bigint>")
-    cond = F.lit(True)
-    for j in range(k):
-        p = (
-            F.conv(
-                F.substring(F.md5(F.concat(fp, F.lit(f":{j}"))), 1, 14), 16, 10
-            ).cast("long")
-            % m_bits
-        )
-        word = F.element_at(lit_words, (F.shiftright(p, 6) + 1).cast("int"))
+    """Boolean column: all k positions set in the bitset — a narrow probe
+    (one binary literal + byte math), no join, no Python, no shuffle.
+    False negatives impossible by construction.
+
+    The words enter the plan as ONE binary literal of their little-endian
+    bytes, so building the column costs a constant number of JVM calls and
+    the expression tree has the same size at every m_bits (F.lit(words)
+    would build one literal node per word: 16 K py4j calls at 2^20 bits).
+    Little-endian packing puts bit p in byte p >> 3 at bit p & 7.  The k
+    positions are tested inside one forall so the literal appears once in
+    the plan (and its printed form), not k times; forall is interpreted
+    rather than codegenned, which measured faster than k inlined copies."""
+    packed = struct.pack(f"<{len(words)}Q", *(w & _U64 for w in words))
+    bitset = F.lit(bytearray(packed))
+
+    def is_set(p: Column) -> Column:
+        byte = F.conv(
+            F.hex(F.substring(bitset, F.shiftright(p, 3).cast("int") + 1, F.lit(1))),
+            16,
+            10,
+        ).cast("int")
         # per-row shift amount: the python F.shiftright wrapper only takes
         # an int, but the underlying SQL function shifts by an expression
-        bit = F.call_function(
-            "shiftright", word, (p % 64).cast("int")
-        ).bitwiseAND(F.lit(1).cast("bigint"))
-        cond = cond & (bit == 1)
-    return cond
+        return F.call_function("shiftright", byte, (p % 8).cast("int")) % 2 == 1
+
+    return F.forall(bloom_positions(fp, m_bits, k), is_set)
 
 
 def bloom_probe_table(
@@ -1022,13 +1033,14 @@ def bloom_probe_arrow(
     fp_col: str = "_fp",
     out_col: str = "_hit",
 ) -> DataFrame:
-    """Jumbo-bitset probe: the literal-array path embeds the bitset in the
-    plan, which stops being reasonable past ~2^27 bits (16 MB of plan per
-    task).  Here the bitset rides a TorrentBroadcast (shipped to each
-    executor once, shared by all its tasks) and the probe is an
-    Arrow-batched numpy pass: vectorized md5 via hashlib over the batch,
-    k position extractions, two fancy-indexing lookups — no join, no
-    shuffle, and memory bounded by (batch x k) int64s.  Semantics are
+    """Jumbo-bitset probe: bloom_hit embeds the bitset in the plan as one
+    m_bits/8-byte binary literal, which every task deserializes — fine at
+    a few MB, not at 2^27 bits and up (16 MB of plan per task).  Here the
+    bitset rides a TorrentBroadcast (shipped to each executor once, shared
+    by all its tasks) and the probe is an Arrow-batched numpy pass:
+    vectorized md5 via hashlib over the batch, k position extractions, two
+    fancy-indexing lookups — no join, no shuffle, and memory bounded by
+    (batch x k) int64s.  Semantics are
     BIT-IDENTICAL to bloom_hit (same md5-portable hash family; pinned by
     test_bloom_arrow_matches_literal_path), so the exact-verify identity
     theorem carries over unchanged.

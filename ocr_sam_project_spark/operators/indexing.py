@@ -69,8 +69,14 @@ def inverted_postings(
         .groupBy("term")
         .agg(F.sort_array(F.collect_list("id")).alias("postings"))
     )
-    return dfreq.join(capped, "term").select(
-        "term", "n_docs", "postings", "truncated"
+    # left join: with max_postings < 1 the capped side is empty, and the
+    # term must still be listed (empty postings, truncated = true)
+    return dfreq.join(capped, "term", "left").select(
+        "term",
+        "n_docs",
+        F.coalesce(F.col("postings"), F.array().cast(capped.schema["postings"].dataType))
+        .alias("postings"),
+        "truncated",
     )
 
 

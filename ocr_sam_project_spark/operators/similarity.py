@@ -456,15 +456,20 @@ def near_dup_cosine(
     # upstream tier) returns the empty pair set instead of dereferencing a
     # None row.  When the plane-count fallback needs the corpus size too,
     # ONE aggregate job returns (count, dim) together — the r5 form paid a
-    # first() job AND a count() job (r6).
+    # first() job AND a count() job (r6).  Both probes skip null vectors,
+    # so a null embedding read first does not hide the dimension.
     if n_planes is None and n_rows is None:
         row = df.agg(
             F.count("*").alias("n"),
-            F.first(F.size(F.col(vec_col))).alias("d"),
+            F.first(F.size(F.col(vec_col)), ignorenulls=True).alias("d"),
         ).first()
         n, dim = (row.n, row.d) if row is not None else (0, None)
     else:
-        first = df.select(F.size(F.col(vec_col)).alias("d")).first()
+        first = (
+            df.filter(F.col(vec_col).isNotNull())
+            .select(F.size(F.col(vec_col)).alias("d"))
+            .first()
+        )
         n, dim = (n_rows, first.d) if first is not None else (0, None)
     if dim is None or n == 0:
         return df.select(
@@ -481,8 +486,9 @@ def near_dup_cosine(
     # value is the same computation, so 6-dp rounding parity is preserved)
     # lazy localCheckpoint: `s` feeds the cap's size aggregate AND both
     # sides of the self-join — without it the signature pandas-UDF pass
-    # re-executes once per consumer (3x the Arrow matmul work, measured)
-    s = spread_scan(df).select(
+    # re-executes once per consumer (3x the Arrow matmul work, measured).
+    # A null vector has no cosine with anything: it pairs with nothing.
+    s = spread_scan(df.filter(F.col(vec_col).isNotNull())).select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
         norm(F.col(vec_col)).alias("n"),
         rhp_signature(F.col(vec_col), planes).alias("sig"),

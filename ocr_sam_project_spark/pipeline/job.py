@@ -56,7 +56,7 @@ def _tune_split_size(
     small-corpus bench collapses to 1 task and cannot scale; at 100 TB the
     computed value caps back at the 128 MB default, so this is a no-op on a
     real cluster (where file count >> cores) and only matters at bench scale.
-    Local paths only; silently keeps defaults elsewhere."""
+    Local paths only: a non-local or unreadable path keeps the defaults."""
     import os
 
     try:
@@ -68,13 +68,13 @@ def _tune_split_size(
             total = os.path.getsize(pages_path)
         else:
             return
-        cores = target_parallelism or spark.sparkContext.defaultParallelism
-        # ~3 waves of tasks per core for balance.  target_parallelism lets a
-        # scaling comparison pin IDENTICAL splits at every cluster size.
-        split = max(_MIN_SPLIT, min(_MAX_SPLIT, total // max(1, cores * 3)))
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-    except Exception:
-        pass
+    except OSError:
+        return
+    cores = target_parallelism or spark.sparkContext.defaultParallelism
+    # ~3 waves of tasks per core for balance.  target_parallelism lets a
+    # scaling comparison pin IDENTICAL splits at every cluster size.
+    split = max(_MIN_SPLIT, min(_MAX_SPLIT, total // max(1, cores * 3)))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
 
 
 def _row_groups_below(pages_path: str, cores: int) -> bool:
@@ -418,11 +418,12 @@ def run_extraction_job(
             # batch scale the semi-join shuffles the whole new batch on fp
             # even though almost none of it is in the store.  The bitset
             # (one word-keyed shuffle of the STORE, output bounded by the
-            # filter size) turns that into a narrow codegen probe; only the
-            # bloom-HIT slice reaches the join.  False negatives are
-            # impossible, the join removes false positives — the loser set,
-            # lineage counts, and survivors are IDENTICAL either way
-            # (test_job_fp_store_bloom_identical).
+            # filter size) rides into the plan as ONE binary literal, so the
+            # probe is a narrow filter whose plan size does not grow with
+            # the filter; only the bloom-HIT slice reaches the join.  False
+            # negatives are impossible, the join removes false positives —
+            # the loser set, lineage counts, and survivors are IDENTICAL
+            # either way (test_job_fp_store_bloom_identical).
             probe_fps = fps
             if fp_store_bloom:
                 from ..operators.dedup import bloom_build, bloom_hit

@@ -583,6 +583,22 @@ def test_near_dup_cosine_degenerate_corpus_bounded(spark):
     assert pairs.filter(F.col("sim") < 0.999999).count() == 0
 
 
+def test_near_dup_cosine_leading_null_embedding(spark):
+    """A null embedding read first must not hide the corpus dimension: both
+    dim probes (the fused (count, dim) aggregate and the n_rows path) skip
+    nulls, so the pair set is the one found without the null row."""
+    from ocr_sam_project_spark.operators.similarity import near_dup_cosine
+
+    vec = [1.0, 0.5, -0.25, 0.125]
+    df = spark.createDataFrame(
+        [(0, None), (1, vec), (2, vec), (3, [-1.0, 0.5, 0.25, 0.0])],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    for kw in ({}, {"n_rows": 4}):
+        pairs = [(r.id_a, r.id_b) for r in near_dup_cosine(df, tau=0.95, **kw).collect()]
+        assert pairs == [(1, 2)], kw
+
+
 def test_salted_group_cap_boundaries(spark):
     """Groups AT the cap keep salt 0 (no split); a group of cap+1 splits
     into exactly ceil((cap+1)/cap) = 2 salt values; salts are stable
@@ -1227,6 +1243,51 @@ def test_bloom_arrow_matches_literal_path(spark):
     assert any(lit.values()) and not all(lit.values())  # both verdicts occur
 
 
+@pytest.mark.parametrize("m_bits", [256, 1 << 20])
+def test_bloom_hit_agrees_with_arrow_and_python_twin(spark, m_bits):
+    """The binary-literal probe must give, row for row, the verdicts of the
+    Arrow probe and of the pure-Python hash twin — at the production filter
+    size and at an undersized one where false positives occur — and
+    bloom_build's words must equal a pure-Python build of the same store."""
+    from test_properties import _bloom_positions_py
+
+    from ocr_sam_project_spark.operators.dedup import (
+        bloom_build, bloom_hit, bloom_probe_arrow, corpus_fingerprints)
+
+    docs = spark.createDataFrame(
+        [(i, f"bloom batch text {i}") for i in range(300)], "doc_id int, text string"
+    )
+    fps = corpus_fingerprints(docs).withColumnRenamed("fp", "_fp")
+    store = fps.filter("doc_id % 3 = 0").select(F.col("_fp").alias("fp"))
+    store_fps = {r.fp for r in store.collect()}
+    words = bloom_build(store, m_bits=m_bits, k=4)
+    py_words = [0] * (m_bits // 64)
+    for fp in store_fps:
+        for p in _bloom_positions_py(fp, m_bits, 4):
+            py_words[p >> 6] |= 1 << (p & 63)
+    assert [w & ((1 << 64) - 1) for w in words] == py_words
+
+    lit = {
+        r.doc_id: r.hit
+        for r in fps.select(
+            "doc_id", "_fp", bloom_hit(F.col("_fp"), words, m_bits, 4).alias("hit")
+        ).collect()
+    }
+    arrow = {r.doc_id: r._hit for r in bloom_probe_arrow(fps, words, m_bits, 4).collect()}
+    fp_of = {r.doc_id: r._fp for r in fps.collect()}
+    twin = {
+        i: all((py_words[p >> 6] >> (p & 63)) & 1 for p in _bloom_positions_py(fp, m_bits, 4))
+        for i, fp in fp_of.items()
+    }
+    assert lit == arrow == twin
+    assert all(lit[i] for i in lit if i % 3 == 0)  # every true member hits
+    false_pos = [i for i in lit if lit[i] and fp_of[i] not in store_fps]
+    if m_bits == 256:
+        assert false_pos  # the undersized filter really fires false positives
+    else:
+        assert not false_pos
+
+
 def test_quantize_embeddings_semantics(spark):
     """int8 quantization pinning: range bound |q| <= 127, the max-|x|
     component hits exactly +/-127, zero vectors quantize to all-zero with
@@ -1489,6 +1550,20 @@ def test_inverted_postings_cap_and_df(spark):
     assert c.postings == [0, 1, 2, 3]  # the cap SMALLEST ids, ascending
     r = got["rare"]
     assert r.n_docs == 2 and r.truncated is False and r.postings == [3, 7]
+
+
+def test_inverted_postings_zero_cap_keeps_every_term(spark):
+    """max_postings < 1 caps every posting list to empty; the term must
+    still be listed with its true df and truncated = true, not dropped."""
+    from ocr_sam_project_spark.operators.indexing import inverted_postings
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "alpha")], "doc_id long, text string"
+    )
+    got = {r.term: r for r in inverted_postings(docs, max_postings=0).collect()}
+    assert set(got) == {"alpha", "beta"}
+    assert got["alpha"].n_docs == 2 and got["beta"].n_docs == 1
+    assert all(r.postings == [] and r.truncated is True for r in got.values())
 
 
 def test_bm25_ranking_semantics(spark):

@@ -648,3 +648,28 @@ def test_job_fp_store_bloom_identical(spark, pages_parquet, tmp_path):
         )
     assert outs["plain"] == outs["bloom"]
     assert outs["bloom"][0] == 10 and outs["bloom"][1] == 5
+
+
+def test_tune_split_size_keeps_defaults_without_local_input(spark, tmp_path, monkeypatch):
+    """A missing path, or a size walk that fails with OSError, leaves the
+    split size alone; any other error propagates."""
+    import os
+
+    from ocr_sam_project_spark.pipeline.job import _tune_split_size
+
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    _tune_split_size(spark, str(tmp_path / "missing.parquet"))
+    assert spark.conf.get(key) == before
+
+    (tmp_path / "pages.parquet").write_bytes(b"x")
+
+    def vanished(path):
+        raise FileNotFoundError(path)
+
+    monkeypatch.setattr(os.path, "getsize", vanished)
+    _tune_split_size(spark, str(tmp_path / "pages.parquet"))
+    assert spark.conf.get(key) == before
+    monkeypatch.undo()
+    with pytest.raises(AttributeError):
+        _tune_split_size(None, str(tmp_path / "pages.parquet"))

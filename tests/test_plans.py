@@ -485,9 +485,10 @@ def test_html_to_text_is_narrow(spark):
 
 
 def test_bloom_probe_is_narrow_codegen(spark):
-    """The Bloom probe must be a pure codegen filter: the bitset rides in
-    the plan as ONE array literal — no join, no Exchange, no Python — so
-    at 100 TB the admission decision costs exactly one narrow pass."""
+    """The Bloom probe must be a narrow filter: the bitset rides in the
+    plan as ONE binary literal of its little-endian words — no join, no
+    Exchange, no Python — so at 100 TB the admission decision costs
+    exactly one narrow pass."""
     from ocr_sam_project_spark.operators.dedup import bloom_hit
     import pyspark.sql.functions as F
 
@@ -499,6 +500,24 @@ def test_bloom_probe_is_narrow_codegen(spark):
     assert "Exchange" not in plan, plan
     assert "Join" not in plan, plan
     assert "Python" not in plan, plan
+
+
+def test_bloom_probe_tree_size_independent_of_filter_size(spark):
+    """bloom_hit's expression tree has the same node count at 2^12 and 2^20
+    bits: the bitset is one literal node, not one node per word (the
+    F.lit(list) form grew to 16 K children at 2^20 and paid one py4j call
+    per word to build them)."""
+    from ocr_sam_project_spark.operators.dedup import bloom_hit
+
+    fps = spark.range(1).select(F.md5(F.col("id").cast("string")).alias("fp"))
+
+    def nodes(m_bits):
+        words = [(1 << 63) | i for i in range(m_bits // 64)]
+        probe = fps.select(bloom_hit(F.col("fp"), words, m_bits, 4).alias("hit"))
+        expr = probe._jdf.queryExecution().analyzed().expressions().head()
+        return len(expr.treeString().splitlines())
+
+    assert nodes(1 << 12) == nodes(1 << 20)
 
 
 def test_wet_curate_single_corpus_scan(spark):
