@@ -156,11 +156,9 @@ def main() -> None:
             )
         # the winning (best-throughput) child's load window rides in the
         # pass cell so every appended row is self-annotating
-        lw_s = [r for r in smalls if r["docs_per_sec"] == small["docs_per_sec"]][0]
-        lw_l = [r for r in larges if r["docs_per_sec"] == large["docs_per_sec"]][0]
         loads = (
-            f"load N {lw_s['load_before']}->{lw_s['load_after']}, "
-            f"4N {lw_l['load_before']}->{lw_l['load_after']}"
+            f"load N {small['load_before']}->{small['load_after']}, "
+            f"4N {large['load_before']}->{large['load_after']}"
         )
         f.write(
             f"| {args.pages} | local[{args.n}] | local[{args.n * 4}] "

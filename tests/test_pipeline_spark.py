@@ -673,3 +673,154 @@ def test_tune_split_size_keeps_defaults_without_local_input(spark, tmp_path, mon
     monkeypatch.undo()
     with pytest.raises(AttributeError):
         _tune_split_size(None, str(tmp_path / "pages.parquet"))
+
+
+# --------------------------------------------------------------------------
+# the tier loop: observed counts, telemetry rows, job count, session confs
+# --------------------------------------------------------------------------
+_SUMMARY_COUNTERS = (
+    "docs_in", "segments_out", "errors", "dups_dropped", "store_dups_dropped",
+    "url_dups_dropped", "blocked_dropped", "robots_dropped", "pii_redactions",
+    "skipped_parts",
+)
+
+
+def _all_tiers_input(spark, pages_parquet, root) -> tuple[str, dict]:
+    """The 400 synthetic pages plus a slice for every drop tier, and the
+    job options that turn every tier on.  Returns (input dir, options).
+
+    blocklist: one of the synthetic hosts; robots: a path prefix on
+    another; url tier: 8 tracking-param variants; text tier: 8 copies
+    under new urls; store tier: a store seeded with the fingerprints of
+    20 corpus pages (small bloom filter, so false positives occur)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_sam_project_spark.operators.dedup import corpus_fingerprints
+    from ocr_sam_project_spark.operators.webgraph import parse_robots
+
+    base = pq.read_table(pages_parquet)
+    judicial = [r for r in base.to_pylist()
+                if (r["text"] or "").strip() and "organojudicial" in r["url"]]
+    extra = []
+    for k, r in enumerate(judicial[:8]):
+        extra.append(dict(r, url=f"{r['url']}?utm_source=feed{k}"))
+    for k, r in enumerate(judicial[8:16]):
+        extra.append(dict(r, url=f"https://copias.example.net/copia/{k:04d}"))
+    in_dir = root / "in"
+    in_dir.mkdir()
+    pq.write_table(base, str(in_dir / "base.parquet"))
+    pq.write_table(pa.Table.from_pylist(extra, schema=base.schema), str(in_dir / "extra.parquet"))
+
+    store = str(root / "fp_store")
+    seed = spark.createDataFrame(judicial[16:36], schema="url string, warc_ts timestamp, "
+                                 "html binary, text string, lang string")
+    corpus_fingerprints(seed, "text", "url").write.parquet(store)
+    robots = parse_robots(spark.createDataFrame(
+        [("mingob.gob.pa", "User-agent: *\nDisallow: /oficios/000001\n")],
+        "host string, robots_txt string"))
+    return str(in_dir), {
+        "num_parts": 8, "dedup": "exact", "url_dedup": True, "pii_scrub": True,
+        "fp_store_path": store, "fp_store_bloom": True, "fp_store_bloom_bits": 256,
+        "blocklist": spark.createDataFrame([("site17.example.com",)], "domain string"),
+        "robots_rules": robots,
+    }
+
+
+def test_job_tier_counts_respect_only_parts_and_resume(spark, pages_parquet, tmp_path):
+    """An all-tiers run restricted to three parts, then resumed: every
+    loser is counted once, by the run that owns its part.  The per-part
+    lineage drops and the summary counters are pinned to the values the
+    per-tier count jobs produced before the counts moved onto the
+    checkpoint."""
+    in_dir, opts = _all_tiers_input(spark, pages_parquet, tmp_path)
+    out = str(tmp_path / "out")
+    s1 = run_extraction_job(spark, in_dir, out, run_id="t1", only_parts=[0, 1, 2], **opts)
+    s2 = run_extraction_job(spark, in_dir, out, run_id="t2", **opts)
+    lin = spark.read.parquet(f"{out}/lineage")
+    rows = sorted(
+        (r.run_id, r.part_id, r.dups_dropped, r.url_dups_dropped, r.blocked_dropped)
+        for r in lin.collect()
+    )
+    assert rows == [
+        ("t1", 0, 1, 1, 1), ("t1", 1, 4, 1, 3), ("t1", 2, 7, 0, 3),
+        ("t2", 3, 2, 0, 8), ("t2", 4, 4, 1, 2), ("t2", 5, 4, 1, 3),
+        ("t2", 6, 3, 4, 3), ("t2", 7, 3, 0, 3),
+    ]
+    assert {k: s1[k] for k in _SUMMARY_COUNTERS} == {
+        "docs_in": 142, "segments_out": 163, "errors": 2, "dups_dropped": 1,
+        "store_dups_dropped": 11, "url_dups_dropped": 2, "blocked_dropped": 4,
+        "robots_dropped": 3, "pii_redactions": 236, "skipped_parts": [],
+    }
+    assert {k: s2[k] for k in _SUMMARY_COUNTERS} == {
+        "docs_in": 212, "segments_out": 247, "errors": 6, "dups_dropped": 7,
+        "store_dups_dropped": 9, "url_dups_dropped": 6, "blocked_dropped": 12,
+        "robots_dropped": 7, "pii_redactions": 366, "skipped_parts": [0, 1, 2],
+    }
+
+
+@pytest.fixture(scope="module")
+def all_tiers_run(spark, pages_parquet, tmp_path_factory):
+    """One all-tiers run under its own job group: (summary, out dir, the
+    number of Spark jobs it issued)."""
+    root = tmp_path_factory.mktemp("all_tiers")
+    in_dir, opts = _all_tiers_input(spark, pages_parquet, root)
+    sc = spark.sparkContext
+    sc.setJobGroup("all-tiers-run", "all-tiers-run")
+    try:
+        s = run_extraction_job(spark, in_dir, str(root / "out"), run_id="at", **opts)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return s, str(root / "out"), len(sc.statusTracker().getJobIdsForGroup("all-tiers-run"))
+
+
+def test_job_tier_metrics_rows_equal_summary(spark, all_tiers_run):
+    """Every tier writes tier_losers:<name> and tier_sec:<name> rows to the
+    long-format metrics table; the loser rows equal the summary counters."""
+    s, out, _ = all_tiers_run
+    m = {r.metric: r.value for r in spark.read.parquet(f"{out}/metrics").collect()}
+    tiers = {"blocklist": "blocked_dropped", "robots": "robots_dropped",
+             "url_dedup": "url_dups_dropped", "exact_dedup": "dups_dropped",
+             "store_dedup": "store_dups_dropped"}
+    assert {t: m[f"tier_losers:{t}"] for t in tiers} == {t: s[k] for t, k in tiers.items()}
+    assert all(s[k] > 0 for k in tiers.values())
+    assert all(m[f"tier_sec:{t}"] > 0 for t in tiers)
+    assert {k for k in m if k.startswith("tier_")} == (
+        {f"tier_losers:{t}" for t in tiers} | {f"tier_sec:{t}" for t in tiers})
+
+
+def test_job_issues_no_per_tier_count_job(all_tiers_run):
+    """Each tier's per-part counts ride its checkpoint job.  The run issues
+    44-46 jobs (robots_filter's own count varies by 2); the bound is the top
+    of that plus 2.  A separate count job per tier, or a chained anti-join
+    per tier, pushes it past (that form issued 65)."""
+    _, _, jobs = all_tiers_run
+    assert jobs <= 46 + 2
+
+
+def test_job_leaves_session_confs_unchanged(spark, pages_parquet, tmp_path):
+    """The job tunes the split size and overwrites partitions dynamically,
+    but the caller's session confs and job description are as they were."""
+    split, mode = "spark.sql.files.maxPartitionBytes", "spark.sql.sources.partitionOverwriteMode"
+    sc = spark.sparkContext
+    spark.conf.set(split, "7777777")
+    spark.conf.set(mode, "static")
+    sc.setJobDescription("caller")
+    try:
+        out = str(tmp_path / "out")
+        run_extraction_job(spark, pages_parquet, out, run_id="c1", num_parts=4,
+                           only_parts=[0], url_dedup=True)
+        # a second run overwrites only its own part under dynamic overwrite
+        run_extraction_job(spark, pages_parquet, out, run_id="c2", num_parts=4,
+                           url_dedup=True)
+        assert spark.conf.get(split) == "7777777"
+        assert spark.conf.get(mode) == "static"
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        parts = {r.part_id for r in spark.read.parquet(f"{out}/extractions")
+                 .select("part_id").distinct().collect()}
+        assert parts == {0, 1, 2, 3}
+    finally:
+        spark.conf.unset(split)
+        spark.conf.unset(mode)
+        sc.setJobDescription(None)
