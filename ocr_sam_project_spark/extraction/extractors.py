@@ -19,7 +19,8 @@ Pinned reference semantics (cites into /root/reference):
 
 from __future__ import annotations
 
-from typing import Any, Optional
+import re
+from typing import Any, Iterator, Optional
 
 from . import patterns as P
 from .classifier import TAXONOMY
@@ -99,9 +100,37 @@ def extract_persons(text: str) -> list[dict[str, Any]]:
     return _person_rows(P.PERSON_ROW, text)
 
 
-def _person_rows(pattern: Any, text: str) -> list[dict[str, Any]]:
+# One run of the person-row name class, from its first uppercase letter.
+_NAME_RUN = re.compile(r"[A-ZÁ-Ú][A-ZÁ-Ú\s\.,/]*")
+
+
+def _person_matches(pattern: re.Pattern[str], text: str) -> Iterator[re.Match[str]]:
+    """`pattern.finditer(text)` for PERSON_ROW / PERSON_ROW_STRICT, in linear
+    time.  Both open with a name over `_NAME_RUN`'s class, and that class
+    holds whitespace, so a name started at any uppercase letter of a run of
+    the class can end anywhere in the rest of that run.  A later start in
+    the run therefore has fewer choices than the first: if the first
+    uppercase letter of a run starts no match, no letter after it in the
+    run does.  finditer would still retry every one of them, each retry
+    backtracking over the rest of the run."""
+    pos = 0
+    run = _NAME_RUN.search
+    match = pattern.match
+    while True:
+        r = run(text, pos)
+        if r is None:
+            return
+        m = match(text, r.start())
+        if m is None:
+            pos = r.end()
+        else:
+            yield m
+            pos = m.end()
+
+
+def _person_rows(pattern: re.Pattern[str], text: str) -> list[dict[str, Any]]:
     persons: list[dict[str, Any]] = []
-    for idx, m in enumerate(pattern.finditer(text)):
+    for idx, m in enumerate(_person_matches(pattern, text)):
         nombre = m.group(1).strip()
         identificacion = m.group(2).strip()
         monto_str = m.group(3).strip().replace(",", "")

@@ -47,6 +47,7 @@ def _mark(label: str, t0: float) -> float:
     return now
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -75,11 +76,20 @@ _LINEAGE_DROPS = ("dups_dropped", "url_dups_dropped", "blocked_dropped")
 def _tune_split_size(
     spark: SparkSession, pages_path: str, target_parallelism: Optional[int] = None
 ) -> None:
-    """Size input splits to the cluster so the map-only extraction stage
-    actually fans out.  With Spark's default 128 MB maxPartitionBytes a
-    small-corpus bench collapses to 1 task and cannot scale; at 100 TB the
-    computed value caps back at the 128 MB default, so this is a no-op on a
-    real cluster (where file count >> cores) and only matters at bench scale.
+    """Size input splits to one wave of tasks: ceil(input bytes / cores).
+
+    The map-only extraction stage then runs one Python task per core.  A
+    Python task has a fixed cost that more, smaller tasks only multiply: at
+    local[4] an identity mapInPandas over 10k synthetic pages took 0.64 s
+    as 4 tasks, 1.65 s as 16 and 5.75 s as 64, against 0.59 s for a 64-task
+    JVM-only scan, i.e. ~0.34 slot-s per Python task
+    (bench/python_task_cost.py).
+    With Spark's default 128 MB maxPartitionBytes a small-corpus bench would
+    collapse to 1 task and not scale at all; at 100 TB the computed value
+    caps back at the 128 MB default, so this is a no-op on a real cluster
+    (where file count >> cores) and only matters at bench scale.
+    `target_parallelism` replaces the core count, so a scaling comparison
+    can pin IDENTICAL splits at every cluster size.
     Local paths only: a non-local or unreadable path keeps the defaults.
     Sets the session conf; run_extraction_job restores it when it returns."""
     try:
@@ -94,9 +104,7 @@ def _tune_split_size(
     except OSError:
         return
     cores = target_parallelism or spark.sparkContext.defaultParallelism
-    # ~3 waves of tasks per core for balance.  target_parallelism lets a
-    # scaling comparison pin IDENTICAL splits at every cluster size.
-    split = max(_MIN_SPLIT, min(_MAX_SPLIT, total // max(1, cores * 3)))
+    split = max(_MIN_SPLIT, min(_MAX_SPLIT, -(-total // max(1, cores))))
     spark.conf.set(_SPLIT_CONF, str(split))
 
 
@@ -106,7 +114,9 @@ def _row_groups_below(pages_path: str, cores: int) -> bool:
     split size (parquet is unsplittable below row-group granularity).
     Only reads footers when the file COUNT is already below `cores` (a
     many-file input is parallel enough without any probe), so at scale
-    this never touches a footer.  Non-local / unreadable paths: False."""
+    this never touches a footer.  Non-local paths, and files that cannot be
+    read or are not parquet (OSError, pyarrow's ArrowException), give
+    False; any other error propagates."""
     try:
         if os.path.isdir(pages_path):
             files = [
@@ -121,15 +131,13 @@ def _row_groups_below(pages_path: str, cores: int) -> bool:
             return False
         if len(files) >= cores:
             return False
-        import pyarrow.parquet as pq
-
         groups = 0
         for f in files:
             groups += pq.ParquetFile(f).metadata.num_row_groups
             if groups >= cores:
                 return False
         return True
-    except Exception:
+    except (OSError, pa.ArrowException):
         return False
 
 

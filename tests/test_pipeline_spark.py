@@ -675,6 +675,67 @@ def test_tune_split_size_keeps_defaults_without_local_input(spark, tmp_path, mon
         _tune_split_size(None, str(tmp_path / "pages.parquet"))
 
 
+def test_row_groups_below_reads_footer_errors_as_false(pages_parquet, tmp_path, monkeypatch):
+    """A .parquet file that is not parquet gives False (pyarrow raises
+    ArrowInvalid); any other error from the footer read propagates."""
+    import pyarrow.parquet as pq
+
+    from ocr_sam_project_spark.pipeline.job import _row_groups_below
+
+    # the 400-page fixture is 2 row groups
+    assert _row_groups_below(pages_parquet, 4) is True
+    assert _row_groups_below(pages_parquet, 2) is False
+    junk = tmp_path / "junk.parquet"
+    junk.write_bytes(b"not a parquet footer")
+    assert _row_groups_below(str(junk), 4) is False
+
+    def broken(path):
+        raise RuntimeError(path)
+
+    monkeypatch.setattr(pq, "ParquetFile", broken)
+    with pytest.raises(RuntimeError):
+        _row_groups_below(pages_parquet, 4)
+
+
+def test_job_arrow_stage_runs_one_python_task_per_core(spark, tmp_path):
+    """The extraction's mapInPandas stage runs at most defaultParallelism
+    Python tasks: one wave, since each Python task pays a fixed setup cost
+    (see _tune_split_size).  The input has more row groups than cores, so
+    the split size alone sets the task count.
+
+    The stage is found by its RDD operation graph (a MapInPandas scope).
+    extract_stage unions the Python branch with a native dead-row branch
+    that scans the same files under the same split size, so the stage runs
+    one task per split per scan; the Python tasks are one scan's share."""
+    from ocr_sam_project_spark.sources.io import write_pages_parquet
+
+    pages = write_pages_parquet(str(tmp_path / "pages.parquet"), n=400, seed=42,
+                                row_group_size=16)
+    sc = spark.sparkContext
+    sc.setJobGroup("one-wave", "one-wave")
+    try:
+        run_extraction_job(spark, pages, str(tmp_path / "out"), num_parts=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    dot_of = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile
+    # jobs that share a stage all list it; a stage that was skipped ran no task
+    stage_ids = {s for j in tracker.getJobIdsForGroup("one-wave")
+                 for s in tracker.getJobInfo(j).stageIds}
+    arrow = []
+    for s in sorted(stage_ids):
+        dot = dot_of(store.operationGraphForStage(s))
+        ran = tracker.getStageInfo(s).numCompletedTasks
+        if 'label="MapInPandas"' in dot and ran:
+            arrow.append((ran, dot.count("FileScanRDD [")))
+    assert len(arrow) == 1, arrow
+    tasks, scans = arrow[0]
+    assert scans >= 1 and tasks % scans == 0, arrow
+    assert tasks // scans <= sc.defaultParallelism, arrow
+
+
 # --------------------------------------------------------------------------
 # the tier loop: observed counts, telemetry rows, job count, session confs
 # --------------------------------------------------------------------------
