@@ -10,7 +10,8 @@ be captured without re-running the whole suite.
 Usage:
   python bench_extra.py explain  <query> [<query> ...] [--tag before]
   python bench_extra.py time     <query> [<query> ...] [--reps 5]
-  python bench_extra.py plancount <query> ...   # Exchange/BatchEvalPython counts
+  python bench_extra.py plancount [<query> ...] # Exchange/BatchEvalPython counts
+                                                # (every registered query if none)
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS (32).
 """
@@ -88,14 +89,19 @@ def main() -> None:
             py = len(re.findall(r"BatchEvalPython|ArrowEvalPython|MapInPandas", txt))
             print(f"{name}: wrote {path} (Exchange={ex}, PythonEval={py})")
     elif mode == "plancount":
-        for name in names:
+        # counts are mentions in the formatted explain (the tree and the
+        # node details can both name a node): comparable between runs
+        for name in names or sorted(QUERY_FNS):
             df = QUERY_FNS[name](spark, SF_DIR)
             txt = _explain_str(df)
             ex = len(re.findall(r"\bExchange\b", txt))
+            rr = len(re.findall(r"RoundRobinPartitioning", txt))
+            scans = len(re.findall(r"\bScan parquet\b", txt))
             py = len(re.findall(r"BatchEvalPython|ArrowEvalPython|MapInPandas", txt))
             sm = len(re.findall(r"SortMergeJoin", txt))
             bh = len(re.findall(r"BroadcastHashJoin", txt))
-            print(f"{name}: Exchange={ex} PythonEval={py} SMJ={sm} BHJ={bh}")
+            print(f"{name}: Exchange={ex} RoundRobin={rr} Scan={scans} "
+                  f"PythonEval={py} SMJ={sm} BHJ={bh}")
     elif mode == "time":
         # warm-up: one noop scan of the base tables + first query compiles
         for t in ("lineitem", "orders", "documents", "embeddings"):

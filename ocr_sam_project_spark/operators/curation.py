@@ -45,11 +45,7 @@ def line_dedup(
     (guide-§8 discipline: shuffle the lightweight proxy, not the payload).
     Skew guard unchanged: a pathological line shared by millions of docs
     lands in one fp partition but carries only (id, pos) rows."""
-    from .skew import spread_scan
-
-    src = spread_scan(
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt"))
-    )
+    src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt"))
     lines = src.select(
         "id", F.posexplode(F.split(F.col("_txt"), "\n")).alias("pos", "line")
     )
@@ -124,15 +120,12 @@ def decontaminate(
     (id, gram) rows (narrow), hits resolve in a broadcast semi-join with no
     corpus shuffle, and only the distinct contaminated-id set (small)
     shuffles before the final anti-join."""
-    from .skew import spread_scan
-
     probe_text_col = probe_text_col or text_col
     probe_grams = (
-        spread_scan(probe_df.select(F.col(probe_text_col)))
-        .select(F.explode(ngrams(F.col(probe_text_col), n)).alias("gram"))
+        probe_df.select(F.explode(ngrams(F.col(probe_text_col), n)).alias("gram"))
         .distinct()
     )
-    corpus_grams = spread_scan(df.select(F.col(id_col), F.col(text_col))).select(
+    corpus_grams = df.select(
         F.col(id_col), F.explode(ngrams(F.col(text_col), n)).alias("gram")
     )
     contaminated = (
@@ -165,9 +158,6 @@ def domain_cap(
     per-domain rank, never its whole slice.  At 10^9-doc domains an
     approximate md5-threshold filter (keep md5(id) < cap/n quantile) drops
     even that."""
-    # NOT spread_scan'd (r6 A/B): the per-row work here is trivial (an md5
-    # only on the over-cap slice), so a full-row spread exchange measured
-    # 2x SLOWER than the single-task scan at sf0.1 (0.43s -> 0.88s).
     counts = df.groupBy(domain_col).agg(F.count("*").alias("_n"))
     over = counts.filter(F.col("_n") > cap).select(domain_col)
     under_rows = df.join(F.broadcast(over), domain_col, "left_anti")
@@ -203,12 +193,7 @@ def pii_scrub(
     the twin engines transform identically.
 
     Scale shape: pure regexp_count/regexp_replace codegen — narrow,
-    shuffle-free, pipeline-able straight into the curation funnel.  The
-    spread_scan restores parallelism on a single-row-group bench input
-    (guarded no-op at scale where the scan already has >= cores splits)."""
-    from .skew import spread_scan
-
-    df = spread_scan(df.select(F.col(id_col), F.col(text_col)))
+    shuffle-free, pipeline-able straight into the curation funnel."""
     t = F.col(text_col)
     out = df.select(
         F.col(id_col),
@@ -298,11 +283,9 @@ def tfidf_topk(
     but at 100 TB it is a whole extra pass to fetch one scalar."""
     from pyspark.sql import Window
 
-    from .skew import spread_scan
-
     if n_docs is None:
         n_docs = df.count()  # fallback scan; the oracle derives the same N
-    toks = spread_scan(df.select(F.col(id_col), F.col(text_col))).select(
+    toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(normalize_for_fingerprint(F.col(text_col)), " ")).alias(
             "term"
@@ -403,7 +386,6 @@ def _pack_binned(df, seq_len, num_parts, text_col, id_col, part_col, extra=None)
     """Shared packing core: per-doc (id, part_id, n_toks, _cum, bin_id).
     `extra` (name -> Column) carries payload THROUGH the stream window's one
     shuffle — cheaper than a second join shuffle to re-attach it later."""
-    from .skew import spread_scan
     from .textstats import token_count
 
     part = (
@@ -411,7 +393,6 @@ def _pack_binned(df, seq_len, num_parts, text_col, id_col, part_col, extra=None)
         if part_col is not None
         else (F.col(id_col) % F.lit(num_parts)).cast("int")
     )
-    df = spread_scan(df)
     toks = df.select(
         F.col(id_col).alias("id"),
         part.alias("part_id"),
@@ -484,14 +465,10 @@ def boilerplate_strip(
     all (src/handlers/document_processor/app.py) — this is the
     corpus-level analog the north_star's training-data pipeline needs.
     """
-    from .skew import spread_scan
-
-    src = spread_scan(
-        df.select(
-            F.col(id_col).alias("id"),
-            F.col(domain_col).alias("domain"),
-            F.col(text_col).alias("_txt"),
-        )
+    src = df.select(
+        F.col(id_col).alias("id"),
+        F.col(domain_col).alias("domain"),
+        F.col(text_col).alias("_txt"),
     )
     lines = src.select(
         "id", "domain", F.explode(F.split(F.col("_txt"), "\n")).alias("line")
@@ -578,10 +555,6 @@ def unigram_logprob(
     The totals table becomes group-count-sized (still tiny) and logp joins
     back by (group, term); each id carries exactly one group value so the
     per-doc aggregation keys stay (id)-shaped."""
-    # NOT spread_scan'd (r6 A/B): unlike the gram-assembling operators the
-    # token explode here is cheap, and an interleaved A/B at sf0.1 measured
-    # the spread exchange a slight net loss (medians 4.4s vs 3.7s under
-    # load; 1.58s vs 1.18s in the clean full-bench window)
     grp = [group_col] if group_col else []
     toks = df.select(
         F.col(id_col).alias("id"),
@@ -679,16 +652,11 @@ def bigram_logprob(
     vocab at web scale is 10^9+ rows), so the probe pays one more
     vocab-keyed shuffle of the doc-bigram tf rows; context totals and V
     fold from the model table (no extra corpus pass)."""
-    from .skew import spread_scan
-
     # r6 shape: the bigram stream explodes an array of (v, w) STRUCTS zipped
     # from the token array and its own 1-shifted slice, so Generate emits
     # only (id, v, w) — the r5 element_at form dragged the whole token array
-    # through the explode and gathered per OUTPUT row.  spread_scan restores
-    # scan parallelism when the input is a single row group (no-op at scale).
-    src = spread_scan(
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt"))
-    )
+    # through the explode and gathered per OUTPUT row.
+    src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt"))
     arr = F.split(normalize_for_fingerprint(F.col("_txt")), " ")
     pairs = F.when(
         F.size(arr) >= 2,
@@ -765,12 +733,9 @@ def token_budget_select(
     rows through one window partition — at 10^9-doc domains, pre-filter
     with an approximate quality threshold from a sample before the exact
     window."""
-    from .skew import spread_scan
     from .textstats import quality_score, token_count
 
-    scored = spread_scan(
-        df.select(F.col(id_col), F.col(domain_col), F.col(text_col))
-    ).select(
+    scored = df.select(
         F.col(id_col).alias("id"),
         F.col(domain_col).alias("domain"),
         token_count(F.col(text_col)).alias("n_tokens"),
@@ -820,9 +785,6 @@ def intra_doc_dedup(
     shuffle for linear work.  Reference parity: the reference has no
     corpus- or document-level dedup at all (each Lambda invocation sees
     one page); this is training-data plumbing the north_star needs."""
-    from .skew import spread_scan
-
-    df = spread_scan(df.select(F.col(id_col), F.col(text_col)))
     lines = F.split(F.col(text_col), "\n")
 
     def _fp(x):
@@ -896,10 +858,8 @@ def dsir_weights(
     delta table broadcasts back onto tf.  No second corpus-wide
     shuffle."""
 
-    from .skew import spread_scan
-
     def _terms(d):
-        return spread_scan(d.select(F.col(text_col))).select(
+        return d.select(
             F.explode(
                 F.split(normalize_for_fingerprint(F.col(text_col)), " ")
             ).alias("term")
@@ -961,9 +921,7 @@ def dsir_weights(
 
 
 def _terms_with_id(d: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    from .skew import spread_scan
-
-    return spread_scan(d.select(F.col(id_col), F.col(text_col))).select(
+    return d.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(normalize_for_fingerprint(F.col(text_col)), " ")).alias(
             "term"
@@ -994,13 +952,9 @@ def dup_ngram_frac(
     count it).  The shared set is NOT broadcast: at web scale it is
     corpus-sized (every boilerplate gram), unlike boilerplate_strip's
     above-threshold template set."""
-    from .skew import spread_scan
-
-    toks = spread_scan(
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt"))
-    ).select(
-        "id",
-        F.split(normalize_for_fingerprint(F.col("_txt")), " ").alias("_t"),
+    toks = df.select(
+        F.col(id_col).alias("id"),
+        F.split(normalize_for_fingerprint(F.col(text_col)), " ").alias("_t"),
     )
     k = F.size(F.col("_t")) - (n - 1)
     # one row per doc regardless of gram count — totals need no shuffle
@@ -1081,11 +1035,10 @@ def span_dedup(
     length — no corpus-sized state, no driver collect.  A pathological
     gram shared by millions of docs lands in one fp partition but carries
     only (id, pos) rows, and the window computes a single min."""
-    from .skew import spread_scan
     from .textstats import normalize_for_fingerprint
 
     norm = normalize_for_fingerprint(F.col(text_col))
-    toks = spread_scan(df.select(F.col(id_col), F.col(text_col))).select(
+    toks = df.select(
         F.col(id_col).alias("id"),
         F.split(norm, " ").alias("tk"),
         F.when(F.length(norm) == 0, F.lit(0))

@@ -31,7 +31,6 @@ import struct
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .skew import spread_scan
 from .textstats import hash64, normalize_for_fingerprint
 
 _U64 = (1 << 64) - 1
@@ -189,11 +188,11 @@ def minhash_signatures(
     (The r1 form exploded ~200 shingle rows per doc and shuffled them back
     through a 16-way min agg; at web scale that shuffle IS the job.)"""
     if fast:
-        base = with_shingle_hashes(spread_scan(df), text_col)
+        base = with_shingle_hashes(df, text_col)
         sh = F.col("_shh")
         mk = lambda i: (lambda g: F.xxhash64(F.lit(i), g))  # noqa: E731
     else:
-        base = with_shingles(spread_scan(df), text_col)
+        base = with_shingles(df, text_col)
         sh = F.col("_sh")
         mk = lambda i: (lambda s: hash64(F.concat(F.lit(f"{i}|"), s)))  # noqa: E731
     sig = F.array(*[F.array_min(F.transform(sh, mk(i))) for i in range(k)])
@@ -744,7 +743,7 @@ def simhash_near_dups(
             stacklevel=2,
         )
         max_bucket = None
-    s = with_simhash(spread_scan(df), text_col, bits).select(
+    s = with_simhash(df, text_col, bits).select(
         F.col(id_col).alias("id"), "sh"
     )
     banded = s.select(

@@ -42,11 +42,8 @@ def inverted_postings(
     both sides already term-partitioned, no extra exchange.  The heavy
     pair stream crosses one skew-free exchange; the two term-keyed
     exchanges carry partially-aggregated / group-limited rows only."""
-    from .skew import spread_scan
-
     pairs = (
-        spread_scan(df.select(F.col(id_col), F.col(text_col)))
-        .select(
+        df.select(
             F.col(id_col).alias("id"),
             F.explode(
                 F.split(normalize_for_fingerprint(F.col(text_col)), " ")
@@ -108,11 +105,10 @@ def bm25_topk(
     at ingest — kept inline here so the query is self-contained and the
     oracle closed-form.  Final top-k is a k-row TakeOrdered, never a
     global sort."""
-    from .skew import spread_scan
     from .textstats import token_count
 
     qt = sorted({t.lower() for t in query_terms})
-    src = spread_scan(df.select(F.col(id_col), F.col(text_col)))
+    src = df.select(F.col(id_col), F.col(text_col))
     toks = src.select(
         F.col(id_col).alias("id"),
         token_count(F.col(text_col)).cast("long").alias("dl"),

@@ -16,6 +16,8 @@
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -55,10 +57,8 @@ def topk_cosine(
 ) -> DataFrame:
     """Brute-force top-k by cosine vs a literal query vector.
     Deterministic tie-break: (sim DESC, id ASC).  Returns (vec_id, sim)."""
-    from .skew import spread_scan
-
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = spread_scan(df).select(
+    scored = df.select(
         F.col(id_col),
         F.round(cosine(F.col(vec_col), q), 6).alias("sim"),
     )
@@ -87,10 +87,8 @@ def topk_cosine_batch(
     Deterministic: sim rounded 6 dp, ties broken on vec_id ASC."""
     from pyspark.sql import Window
 
-    from .skew import spread_scan
-
     scored = (
-        spread_scan(df)
+        df
         .crossJoin(F.broadcast(queries.select(query_id_col, query_vec_col)))
         .select(
             query_id_col,
@@ -117,20 +115,37 @@ def rhp_signature(vec_col: Column, planes: list[list[float]]) -> Column:
     nested F.aggregate expression tree per plane — was O(planes x dim)
     lambda-expression evaluations per row and codegenned poorly (the 11x
     LSH-slower-than-brute anomaly in BENCH_r01)."""
+    P = np.asarray(planes, dtype=np.float64).T  # (dim, n_planes)
+    return _sign_signature(vec_col, P.shape[1], lambda dim: P)
+
+
+def rhp_signature_by_dim(vec_col: Column, n_planes: int) -> Column:
+    """rhp_signature over deterministic_planes(dim, n_planes), with dim read
+    from each batch's vectors inside the UDF: the caller builds it without
+    a driver-side dimension probe (a Spark job over its input).  Same
+    planes, so the same bits."""
+    return _sign_signature(vec_col, n_planes, lambda dim: _plane_matrix(dim, n_planes))
+
+
+def _sign_signature(vec_col: Column, n_planes: int, planes_for) -> Column:
     from pyspark.sql.functions import pandas_udf
 
-    P = np.asarray(planes, dtype=np.float64).T  # (dim, n_planes)
-    weights = (1 << np.arange(P.shape[1])).astype(np.int64)
+    weights = (1 << np.arange(n_planes)).astype(np.int64)
 
     @pandas_udf("long")
     def _sig(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype="int64")
         m = np.vstack(v.to_numpy()).astype(np.float64)  # (batch, dim)
-        bits = (m @ P) >= 0.0
+        bits = (m @ planes_for(m.shape[1])) >= 0.0
         return pd.Series(bits @ weights)
 
     return _sig(vec_col)
+
+
+@functools.lru_cache(maxsize=8)
+def _plane_matrix(dim: int, n_planes: int) -> np.ndarray:
+    return np.asarray(deterministic_planes(dim, n_planes), dtype=np.float64).T
 
 
 def deterministic_planes(dim: int, n_planes: int) -> list[list[float]]:
@@ -160,16 +175,12 @@ def rhp_signature_table(
     deployment: signatures are computed once and stored (e.g. a parquet /
     Iceberg column, ideally partitioned or z-ordered by signature), so each
     query probe reads only matching buckets instead of re-hashing 10^9+
-    vectors per query."""
-    from .skew import spread_scan
-
+    vectors per query.  Without `dim` the planes follow the vectors'
+    dimension inside the UDF, so building the table runs no job."""
     if dim is None:
-        row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-        if row is None:  # empty input: empty signature table, same schema
-            return df.withColumn(sig_col, F.lit(None).cast("long"))
-        dim = row.d
+        return df.withColumn(sig_col, rhp_signature_by_dim(F.col(vec_col), n_planes))
     planes = deterministic_planes(dim, n_planes)
-    return spread_scan(df).withColumn(sig_col, rhp_signature(F.col(vec_col), planes))
+    return df.withColumn(sig_col, rhp_signature(F.col(vec_col), planes))
 
 
 def query_probe_sigs(query_vec: list[float], n_planes: int = 6, multiprobe: int = 1) -> list[int]:
@@ -308,8 +319,6 @@ def ivf_assign(
     takes the first max)."""
     from pyspark.sql.functions import pandas_udf
 
-    from .skew import spread_scan
-
     cent_rows = (
         centroids
         if centroids is not None
@@ -333,7 +342,7 @@ def ivf_assign(
         sims = _round6_half_away((m @ C) / (vnorm[:, None] * cnorm[None, :]))
         return pd.Series(cids[np.argmax(sims, axis=1)])
 
-    return spread_scan(df).withColumn("centroid_id", _assign(F.col(vec_col)))
+    return df.withColumn("centroid_id", _assign(F.col(vec_col)))
 
 
 def ivf_search(
@@ -450,36 +459,19 @@ def near_dup_cosine(
       ceil(n_b/cap) subgroups instead of exploding O(n_b^2)."""
     import math
 
-    from .skew import spread_scan
-
-    # infer dim driver-side; an EMPTY input (e.g. every doc dropped by an
-    # upstream tier) returns the empty pair set instead of dereferencing a
-    # None row.  When the plane-count fallback needs the corpus size too,
-    # ONE aggregate job returns (count, dim) together — the r5 form paid a
-    # first() job AND a count() job (r6).  Both probes skip null vectors,
-    # so a null embedding read first does not hide the dimension.
-    if n_planes is None and n_rows is None:
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.first(F.size(F.col(vec_col)), ignorenulls=True).alias("d"),
-        ).first()
-        n, dim = (row.n, row.d) if row is not None else (0, None)
-    else:
-        first = (
-            df.filter(F.col(vec_col).isNotNull())
-            .select(F.size(F.col(vec_col)).alias("d"))
-            .first()
-        )
-        n, dim = (n_rows, first.d) if first is not None else (0, None)
-    if dim is None or n == 0:
-        return df.select(
-            F.col(id_col).alias("id_a"),
-            F.col(id_col).alias("id_b"),
-            F.lit(0.0).alias("sim"),
-        ).limit(0)
+    # the planes follow the vectors' dimension inside the signature UDF,
+    # so no driver-side dim probe runs; only the plane-count fallback needs
+    # the corpus size, and an EMPTY input (e.g. every doc dropped by an
+    # upstream tier) then returns the empty pair set straight away
     if n_planes is None:
+        n = n_rows if n_rows is not None else df.count()
+        if n == 0:
+            return df.select(
+                F.col(id_col).alias("id_a"),
+                F.col(id_col).alias("id_b"),
+                F.lit(0.0).alias("sim"),
+            ).limit(0)
         n_planes = max(8, math.ceil(math.log2(max(8.0 * n / max_bucket, 2.0))))
-    planes = deterministic_planes(dim, n_planes)
     # norms precomputed ONCE per row, not per pair: cosine(a,b) inline would
     # re-run three O(dim) HOF aggregates per candidate pair; carrying the
     # scalar norm leaves one dot per pair (identical arithmetic — the norm
@@ -488,10 +480,10 @@ def near_dup_cosine(
     # sides of the self-join — without it the signature pandas-UDF pass
     # re-executes once per consumer (3x the Arrow matmul work, measured).
     # A null vector has no cosine with anything: it pairs with nothing.
-    s = spread_scan(df.filter(F.col(vec_col).isNotNull())).select(
+    s = df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
         norm(F.col(vec_col)).alias("n"),
-        rhp_signature(F.col(vec_col), planes).alias("sig"),
+        rhp_signature_by_dim(F.col(vec_col), n_planes).alias("sig"),
     ).localCheckpoint(eager=False)
     s = salted_group_cap(s, ["sig"], max_bucket, "id")
     a, b = s.alias("a"), s.alias("b")
@@ -645,8 +637,6 @@ def _kmeans_assign(
     narrow Arrow-matmul shape as ivf_assign: no join, no window."""
     from pyspark.sql.functions import pandas_udf
 
-    from .skew import spread_scan
-
     cnorm = np.sqrt((C * C).sum(axis=0))
 
     @pandas_udf("cluster_id long, sim double")
@@ -661,7 +651,7 @@ def _kmeans_assign(
             {"cluster_id": cids[best], "sim": sims[np.arange(len(best)), best]}
         )
 
-    out = spread_scan(df).withColumn("_a", _assign(F.col(vec_col)))
+    out = df.withColumn("_a", _assign(F.col(vec_col)))
     return out.select(
         F.col(id_col),
         F.col(vec_col),
@@ -821,8 +811,6 @@ def topk_cosine_quantized(
     Returns (vec_id, qsim)."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    from .skew import spread_scan
-
     # query quantized with the ENGINES' rounding (HALF_UP), not Python's
     # round() (HALF_EVEN — 2.5 would quantize to 2 here but 3 in the
     # corpus path, breaking quantize-both-sides symmetry), and clamped to
@@ -844,7 +832,7 @@ def topk_cosine_quantized(
         for x in query_vec
     ]
     qlit = F.array(*[F.lit(int(v)).cast("double") for v in qq])
-    quant = quantize_embeddings(spread_scan(df), id_col=id_col, vec_col=vec_col)
+    quant = quantize_embeddings(df, id_col=id_col, vec_col=vec_col)
     scored = quant.select(
         F.col(id_col),
         F.round(

@@ -1,35 +1,17 @@
-"""Skew-handling join utilities — the explicit strategies the north_rule
-requires beyond AQE's automatic skew-join splitting.
+"""salted_join — the explicit skew strategy the north_rule requires beyond
+AQE's automatic skew-join splitting.
 
-* salted_join — replicate the small side R times, salt the big side's key
-  with pmod(xxhash64(row-id), R): a hot key's rows spread over R reducers
-  instead of melting one.  Use when the big side has Zipfian keys and the
-  small side is too large to broadcast outright.
-* broadcast small dims (the first resort) is just F.broadcast — used by
-  j1/j4; this module covers the case where broadcast doesn't fit.
+It replicates the small side R times and salts the big side's key with
+pmod(xxhash64(row-id), R): a hot key's rows spread over R reducers instead
+of melting one.  Use it when the big side has Zipfian keys and the small
+side is too large to broadcast outright; broadcasting a small dim (the
+first resort) is just F.broadcast, as j1/j4 do.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def spread_scan(df: DataFrame) -> DataFrame:
-    """Guarantee >= defaultParallelism partitions before a compute-heavy
-    narrow stage.
-
-    A single-row-group parquet file scans as ONE task (Spark cannot split
-    below row-group granularity), serializing any per-row hashing/UDF work
-    that follows.  When the scan yields fewer partitions than cores, one
-    round-robin repartition of the (cheap, pre-compute) rows restores
-    parallelism.  At production scale the scan already has >= cores splits
-    and this is a no-op — no shuffle is added.
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def salted_join(

@@ -85,13 +85,8 @@ def extract_links(
     per call is the upper bound; both are JVM-side).  A link farm page is
     bounded by its own html size — no cross-row skew possible before the
     (optional) downstream host aggregate."""
-    from .skew import spread_scan
-
     s = F.col(html_col).cast("string")
-    # spread_scan restores scan parallelism for the regex pass when the
-    # bench input is one row group (guarded no-op at scale — guide §1.2:
-    # the per-task regex work is the job here)
-    base = spread_scan(df.select(F.col(url_col), F.col(html_col))).select(
+    base = df.select(
         F.col(url_col).alias("url"),
         host_of(F.col(url_col)).alias("_src_host"),
         F.regexp_extract_all(s, F.lit(LINK_RE), F.lit(1)).alias("_h"),
@@ -220,9 +215,7 @@ def blocklist_filter(
     hit set corpus-sized — at that point flip the second join to a regular
     anti-join on id; the default wiring optimizes the real regime (<1%
     drop rate)."""
-    from .skew import spread_scan
-
-    probe = spread_scan(df.select(F.col(id_col), F.col(url_col))).select(
+    probe = df.select(
         F.col(id_col),
         F.explode(domain_suffixes(host_of(F.col(url_col)), max_labels)).alias("_sfx"),
     )
@@ -423,12 +416,7 @@ def html_to_text(
     wildly in size but each row's cost is bounded by its own html bytes
     (regex passes are linear — the pattern bank is backtracking-safe:
     every '.*?' is bounded by a required literal terminator), so skew =
-    input skew, which the parquet split planner already handles.
-    spread_scan restores parallelism when the bench input is a single row
-    group (guarded no-op at scale)."""
-    from .skew import spread_scan
-
-    df = spread_scan(df)
+    input skew, which the parquet split planner already handles."""
     text = html_text(F.col(html_col))
     keep = [c for c in df.columns if c != html_col]
     return df.select(
@@ -469,9 +457,6 @@ def crawl_diff(
     from .curation import canonical_url
     from .textstats import normalize_for_fingerprint
 
-    # NOT spread_scan'd (r6 A/B): spreading each side's full (url, text, id)
-    # rows measured 2x SLOWER than the single-task scan at sf0.1 (0.57s ->
-    # 1.31s) — the exchange ships the text payload to parallelize one md5
     def _side(df: DataFrame, tag: str) -> DataFrame:
         return (
             df.select(
@@ -562,10 +547,9 @@ def host_dup_ratio(
     payload is a 32-char fp, never text), then host-cardinality rollup.
     A mega-host skews one partition of the first shuffle but carries
     fp-sized rows only."""
-    from .skew import spread_scan
     from .textstats import fingerprint
 
-    pairs = spread_scan(df.select(F.col(url_col), F.col(text_col))).select(
+    pairs = df.select(
         F.nullif(host_of(F.col(url_col)), F.lit("")).alias("host"),
         fingerprint(F.col(text_col)).alias("_fp"),
     ).filter(F.col("host").isNotNull())
@@ -637,11 +621,9 @@ def robots_filter(
     verdict aggregate, both carrying (url, small-int) payloads, never
     html.  A mega-host's pages spread over the url aggregate's hash
     partitioning — per-url groups are rule-count-sized."""
-    from .skew import spread_scan
-
     path0 = F.regexp_extract(F.col(url_col), r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+(/[^?#]*)?", 1)
     path = F.when(path0 == "", F.lit("/")).otherwise(path0)
-    keyed = spread_scan(pages).withColumn(
+    keyed = pages.withColumn(
         "_host", F.nullif(host_of(F.col(url_col)), F.lit(""))
     )
     ruled_hosts = rules.select(F.col("host").alias("_host")).distinct()

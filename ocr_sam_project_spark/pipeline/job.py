@@ -47,12 +47,12 @@ def _mark(label: str, t0: float) -> float:
     return now
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
+from ..sources.io import read_spread
 from .schema import LINEAGE_SCHEMA, METRICS_SCHEMA
 from .stages import extract_stage
 
@@ -106,39 +106,6 @@ def _tune_split_size(
     cores = target_parallelism or spark.sparkContext.defaultParallelism
     split = max(_MIN_SPLIT, min(_MAX_SPLIT, -(-total // max(1, cores))))
     spark.conf.set(_SPLIT_CONF, str(split))
-
-
-def _row_groups_below(pages_path: str, cores: int) -> bool:
-    """True iff the LOCAL parquet input's total row-group count is below
-    `cores` — i.e. the scan cannot reach full parallelism no matter the
-    split size (parquet is unsplittable below row-group granularity).
-    Only reads footers when the file COUNT is already below `cores` (a
-    many-file input is parallel enough without any probe), so at scale
-    this never touches a footer.  Non-local paths, and files that cannot be
-    read or are not parquet (OSError, pyarrow's ArrowException), give
-    False; any other error propagates."""
-    try:
-        if os.path.isdir(pages_path):
-            files = [
-                os.path.join(root, f)
-                for root, _dirs, fs in os.walk(pages_path)
-                for f in fs
-                if f.endswith(".parquet")
-            ]
-        elif os.path.isfile(pages_path):
-            files = [pages_path]
-        else:
-            return False
-        if len(files) >= cores:
-            return False
-        groups = 0
-        for f in files:
-            groups += pq.ParquetFile(f).metadata.num_row_groups
-            if groups >= cores:
-                return False
-        return True
-    except (OSError, pa.ArrowException):
-        return False
 
 
 def _part_id(num_parts: int) -> Column:
@@ -364,16 +331,10 @@ def run_extraction_job(
         # row conversion reads it
         ts = run_ts.astimezone(timezone.utc)
 
-        # Row-group-aware spread at the SCAN (r6): parquet cannot split below
-        # a row group, so a few single-row-group files would run every tier
-        # and the Python extraction on that many cores (extract+write 10s ->
-        # ~3s at sf0.1 on a 4-row-group input, local[32]).  Footers are read
-        # only when files are fewer than cores, so this is a no-op at scale.
-        raw_pages = spark.read.parquet(pages_path)
-        par = spark.sparkContext.defaultParallelism
-        if _row_groups_below(pages_path, par):
-            raw_pages = raw_pages.repartition(par)
-        pages = with_part_id(raw_pages, num_parts)
+        # the one scan feeds every tier and the Python extraction; spreading
+        # a 4-row-group sf0.1 input took extract+write from 10s to ~3s at
+        # local[32]
+        pages = with_part_id(read_spread(spark, pages_path), num_parts)
         done = set(completed_parts(spark, lineage_path))
         run_parts = [p for p in range(num_parts)
                      if p not in done and (only_parts is None or p in only_parts)]

@@ -55,51 +55,14 @@ def extract_stage(pages: DataFrame, pages_per_doc: int = 1) -> DataFrame:
     """pages(url, html, text, lang[, ...]) -> extractions DataFrame.
 
     Column-prunes its own input (never drags warc_ts/part_id through Arrow)
-    and pre-filters obviously-dead rows with a cheap native predicate before
-    paying the Python cost (the reference's cheap-predicate-first idiom,
-    SURVEY.md §4).
+    and scans it once: every row enters the one Python stage, and a page
+    with neither html payload nor text comes back as an `empty_document`
+    quarantine row (DLQ contract, SURVEY.md §2.11).
     """
-    slim = pages.select("url", "html", "text", "lang")
-    # cheap native gate: rows with neither html payload nor text are
-    # quarantined without entering Python.  NULL-proof: with html=NULL and
-    # text=NULL a bare `length(html) > 0` predicate is SQL NULL, so BOTH
-    # filter(alive) and filter(~alive) would drop the row — coalesce to 0 so
-    # every row lands in exactly one branch (DLQ contract, SURVEY.md §2.11).
-    alive = (F.coalesce(F.length(F.col("html")), F.lit(0)) > 0) | (
-        F.coalesce(F.length(F.trim(F.col("text"))), F.lit(0)) > 0
-    )
-    live = slim.filter(alive)
-    dead = (
-        slim.filter(~alive)
-        .select(
-            F.col("url"),
-            F.lit(1).alias("seg_no"),
-            F.lit("unknown").alias("doc_type"),
-            F.lit("Desconocido").alias("tramite"),
-            F.lit("Desconocido").alias("departamento"),
-            F.lit("").alias("extracted_text"),
-            F.lit(None).cast("string").alias("numero_oficio"),
-            F.lit(None).cast("string").alias("fecha"),
-            F.lit(None).cast("string").alias("autoridad"),
-            F.lit(None).cast(RAW_EXTRACTION_SCHEMA["fields"].dataType).alias("fields"),
-            F.lit(None).cast(RAW_EXTRACTION_SCHEMA["personas_primary"].dataType).alias("personas_primary"),
-            F.lit(None).cast(RAW_EXTRACTION_SCHEMA["personas_fallback"].dataType).alias("personas_fallback"),
-            F.lit("").alias("observaciones"),
-            F.lit(None).cast("array<string>").alias("palabras_clave"),
-            F.lit(0.0).alias("validation_score"),
-            F.lit(False).alias("validation_passed"),
-            F.lit(False).alias("persons_expected"),
-            F.lit("baja").alias("confianza"),
-            F.lit(False).alias("urgente"),
-            F.lit(0).alias("declared_count"),
-            F.lit(False).alias("count_valid"),
-            F.lit("empty_document").alias("error"),
-        )
-    )
-    extracted = live.mapInPandas(
+    extracted = pages.select("url", "html", "text", "lang").mapInPandas(
         lambda it: _extract_batches(it, pages_per_doc), schema=RAW_EXTRACTION_SCHEMA
     )
-    return enrich_stage(extracted.unionByName(dead))
+    return enrich_stage(extracted)
 
 
 def enrich_stage(raw: DataFrame) -> DataFrame:

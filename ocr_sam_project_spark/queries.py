@@ -25,6 +25,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sources.io import read_spread
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -46,15 +48,24 @@ _LOADED: "weakref.WeakKeyDictionary[SparkSession, str]" = weakref.WeakKeyDiction
 def _load(spark: SparkSession, sf_dir: str) -> None:
     if _LOADED.get(spark) == sf_dir:
         return
-    # Views are registered over the BARE scans (r6 A/B): wrapping the big
-    # tables in spread_scan regressed nearly every SQL query (a2 0.22s ->
-    # 0.74s, w1 0.30s -> 0.71s, q3 0.76s -> 1.20s at sf0.1) — their per-row
-    # expressions are cheap and the aggregates already do map-side partials,
-    # so the exchange costs more than the single-task scan it parallelizes.
-    # The spread belongs only inside the regex/Python-heavy operators.
+    # Views are registered over BARE scans (r6 A/B): spreading the big
+    # tables regressed nearly every SQL query (a2 0.22s -> 0.74s, w1 0.30s ->
+    # 0.71s, q3 0.76s -> 1.20s at sf0.1) — their per-row expressions are
+    # cheap and the aggregates already do map-side partials, so the exchange
+    # costs more than the single-task scan it parallelizes.  Only the
+    # regex/Python-heavy queries read through read_spread.
     for t in TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
     _LOADED[spark] = sf_dir
+
+
+def _bare(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """`table`'s registered bare scan, for a driver probe or a small side
+    input beside a read_spread frame (see read_spread).  The view reuses
+    the file listing and footer read that each spark.read.parquet repeats
+    (~0.1 s per read of a one-file sf0.1 table, local[4] on 4 vCPUs)."""
+    _load(spark, sf_dir)
+    return spark.table(table)
 
 
 def _sql(name: str, spark_sql: str, duck_sql: str | None) -> None:
@@ -1245,15 +1256,12 @@ ORACLES["t_curate_corpus"] = _t_curate_duck()
 # D — deduplication
 # ===========================================================================
 def _t_winnow_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.skew import spread_scan
     from .operators.textstats import with_winnow_fingerprints
 
     # deterministic quarter of the corpus: the md5-portable rolling hash is
     # ~300 interpreted HOF evaluations per doc, and this query exists to
     # evidence VALUE parity, not throughput (production swaps xxhash64).
-    df = spread_scan(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").filter(F.col("doc_id") % 4 == 0)
-    )
+    df = read_spread(spark, f"{sf_dir}/documents.parquet").filter(F.col("doc_id") % 4 == 0)
     out = with_winnow_fingerprints(df, "text", k=8, w=4)
     return out.select("doc_id", F.explode("winnow_fps").alias("fp"))
 
@@ -1296,7 +1304,7 @@ QUERY_FNS["d_exact_dedup"] = _d_exact_fn
 def _d_minhash_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import minhash_signatures
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = read_spread(spark, f"{sf_dir}/documents.parquet")
     sig = minhash_signatures(df, k=4)
     return sig.select(
         F.col("id").alias("doc_id"),
@@ -1353,9 +1361,8 @@ QUERY_FNS["d_ngram_jaccard"] = _d_jaccard_fn
 
 def _d_simhash_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import with_simhash
-    from .operators.skew import spread_scan
 
-    df = spread_scan(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    df = read_spread(spark, f"{sf_dir}/documents.parquet")
     return with_simhash(df, "text", bits=16).select("doc_id", "sh")
 
 
@@ -1472,15 +1479,15 @@ def _s_neardup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     The thresholded scale path is operators.similarity.near_dup_cosine,
     benched via the LSH queries.)"""
     from .operators.similarity import dot, norm
-    from .operators.skew import spread_scan
 
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # norms once per ROW, not per pair (O(n) instead of O(n^2) norm work)
-    a = spread_scan(df).select(
+    # norms once per ROW, not per pair (O(n) instead of O(n^2) norm work);
+    # the broadcast side reads the bare scan, so only the streamed side
+    # pays the round-robin Exchange
+    a = read_spread(spark, f"{sf_dir}/embeddings.parquet").select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"),
         norm(F.col("embedding")).alias("na"),
     )
-    b = df.select(
+    b = _bare(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"),
         norm(F.col("embedding")).alias("nb"),
     )
@@ -1545,7 +1552,7 @@ def _s_rhp_near_dup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     all have to agree with the DuckDB twin for the hash to match."""
     from .operators.similarity import near_dup_cosine
 
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    df = read_spread(spark, f"{sf_dir}/embeddings.parquet")
     return near_dup_cosine(
         df, tau=_RHP_ND_TAU, n_planes=_RHP_ND_PLANES, max_bucket=_RHP_ND_CAP
     )
@@ -1603,7 +1610,7 @@ _CP_NEG_LO, _CP_NEG_HI, _CP_CELLS, _CP_CLUSTER_CAP = 0.1, 0.3, 8, 64
 def _s_contrastive_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import contrastive_pairs
 
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    df = read_spread(spark, f"{sf_dir}/embeddings.parquet")
     return contrastive_pairs(
         df,
         tau_pos=_RHP_ND_TAU,
@@ -1682,9 +1689,8 @@ def _m_media_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimodal plumbing from pytest-only to driver-hash-verified.  Feature
     vector flattened to scalar columns (canonicalizer-safe)."""
     from .operators.multimodal import media_features
-    from .operators.skew import spread_scan
 
-    docs = spread_scan(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     media = docs.select("doc_id", F.col("text").cast("binary").alias("blob"))
     feats = media_features(media, "doc_id", "blob", fake=True)
     return feats.select(
@@ -1841,11 +1847,7 @@ def _docs_as_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> pages shape with the deterministic pseudo-oficio header
     grafted on (same enrichment as __spark_entry__.entry), so the full
     extractor chain has real structure to find."""
-    from .operators.skew import spread_scan
-
-    # spread_scan: the single-row-group bench input would otherwise feed
-    # the whole Arrow extraction stage from ONE task (no-op at scale)
-    docs = spread_scan(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     return docs.select(
         F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
         F.lit(None).cast("binary").alias("html"),
@@ -2052,7 +2054,7 @@ def _d_lsh_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     no exact SQL twin; d_minhash_lsh_portable carries the per-step oracle."""
     from .operators.dedup import minhash_near_dups
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = read_spread(spark, f"{sf_dir}/documents.parquet")
     return minhash_near_dups(df, threshold=0.5)
 
 
@@ -2067,7 +2069,7 @@ def _d_lsh_portable_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagship dedup scale path from rows-only to hash-verified."""
     from .operators.dedup import minhash_near_dups
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = read_spread(spark, f"{sf_dir}/documents.parquet")
     return minhash_near_dups(df, threshold=0.5, k=8, bands=4, fast=False)
 
 
@@ -2115,7 +2117,7 @@ def _d_lsh_clusters_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     computing the transitive closure over the SAME pair set."""
     from .operators.dedup import minhash_near_dups, resolve_clusters
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = read_spread(spark, f"{sf_dir}/documents.parquet")
     pairs = minhash_near_dups(df, threshold=0.5, k=8, bands=4, fast=False)
     return resolve_clusters(pairs)
 
@@ -2144,7 +2146,7 @@ def _d_lsh_clusters_fast_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     above carries the oracle.  This is the variant bench.py times."""
     from .operators.dedup import minhash_near_dups, resolve_clusters
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = read_spread(spark, f"{sf_dir}/documents.parquet")
     return resolve_clusters(minhash_near_dups(df, threshold=0.5, fast=True))
 
 
@@ -2154,7 +2156,7 @@ QUERY_FNS["d_lsh_clusters_fast"] = _d_lsh_clusters_fast_fn
 def _d_simhash_nd_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import simhash_near_dups
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = read_spread(spark, f"{sf_dir}/documents.parquet")
     out = simhash_near_dups(df, bits=16, max_hamming=2)
     return out.withColumn("hamming", F.col("hamming").cast("long"))
 
@@ -2193,7 +2195,7 @@ def _d_simhash_clusters_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-source-agnostic)."""
     from .operators.dedup import resolve_clusters, simhash_near_dups
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = read_spread(spark, f"{sf_dir}/documents.parquet")
     return resolve_clusters(simhash_near_dups(df, bits=16, max_hamming=2))
 
 
@@ -2217,8 +2219,11 @@ ORACLES["d_simhash_clusters"] = _d_simhash_clusters_duck()
 def _s_lsh_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import topk_cosine_lsh
 
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qv = df.filter(F.col("vec_id") == 0).select("embedding").first().embedding
+    # the driver probe reads the bare scan: over the spread frame, first()
+    # would run the whole round-robin shuffle to fetch one row
+    probe = _bare(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
+    qv = probe.select("embedding").first().embedding
+    df = read_spread(spark, f"{sf_dir}/embeddings.parquet")
     return topk_cosine_lsh(df, [float(x) for x in qv], k=10)
 
 
@@ -2259,10 +2264,15 @@ ORACLES["s_topk_cosine_lsh"] = _s_lsh_duck()
 
 
 def _s_ivf_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.similarity import ivf_assign
+    from .operators.similarity import ivf_assign, ivf_centroids
 
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return ivf_assign(df, n_centroids=8).groupBy("centroid_id").count().withColumnRenamed("count", "n")
+    # centroid sample from the bare scan (see _s_lsh_fn)
+    cents = ivf_centroids(_bare(spark, sf_dir, "embeddings"), 8)
+    df = read_spread(spark, f"{sf_dir}/embeddings.parquet")
+    return (
+        ivf_assign(df, n_centroids=8, centroids=cents)
+        .groupBy("centroid_id").count().withColumnRenamed("count", "n")
+    )
 
 
 def _s_ivf_duck(n_centroids: int = 8) -> str:
@@ -2294,11 +2304,15 @@ def _s_ivf_search_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id=0 embedding), exact cosine top-k inside their posting lists only.
     Deterministic end to end (md5-sampled centroids, 6-dp rounding, id
     tie-breaks) -> exact DuckDB twin."""
-    from .operators.similarity import ivf_search
+    from .operators.similarity import ivf_centroids, ivf_search
 
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qv = [float(x) for x in df.filter(F.col("vec_id") == 0).first().embedding]
-    return ivf_search(df, qv, k=10, nprobe=2, n_centroids=8)
+    # query vector and centroid sample from the bare scan (see _s_lsh_fn)
+    bare = _bare(spark, sf_dir, "embeddings")
+    qv = [float(x) for x in bare.filter(F.col("vec_id") == 0).first().embedding]
+    df = read_spread(spark, f"{sf_dir}/embeddings.parquet")
+    return ivf_search(
+        df, qv, k=10, nprobe=2, n_centroids=8, centroids=ivf_centroids(bare, 8)
+    )
 
 
 def _s_ivf_search_duck(n_centroids: int = 8, nprobe: int = 2, k: int = 10) -> str:
@@ -2337,10 +2351,12 @@ def _s_topk_batch_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     score -> one query_id-shuffle window top-k)."""
     from .operators.similarity import topk_cosine_batch
 
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qs = df.filter(F.col("vec_id") % 100 == 0).select(
+    # the broadcast query set reads the bare scan: spreading it would add a
+    # second round-robin Exchange for 1% of the rows
+    qs = _bare(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
+    df = read_spread(spark, f"{sf_dir}/embeddings.parquet")
     return topk_cosine_batch(df, qs, k=5)
 
 
@@ -2501,7 +2517,7 @@ def _t_line_dedup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     first (doc_id, pos) occurrence corpus-wide."""
     from .operators.curation import line_dedup
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     tk = F.split(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " ")
     n_lines = F.ceil(F.size(tk) / F.lit(_CHUNK)).cast("int")
     chunked = docs.select(
@@ -2566,7 +2582,7 @@ def _t_span_dedup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     later positions; docs rebuilt from surviving canonical tokens."""
     from .operators.curation import span_dedup
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     return span_dedup(docs, n=_SPAN_N)
 
 
@@ -2624,8 +2640,9 @@ def _t_decontaminate_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped.  Returns the surviving corpus ids."""
     from .operators.curation import decontaminate
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    probe = docs.filter(F.col("doc_id") % 97 == 0)
+    # the 1/97 probe set reads the bare scan (see _s_topk_batch_fn)
+    probe = _bare(spark, sf_dir, "documents").filter(F.col("doc_id") % 97 == 0)
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     corpus = docs.filter(F.col("doc_id") % 97 != 0)
     return decontaminate(corpus, probe, n=5).select("doc_id")
 
@@ -2654,6 +2671,9 @@ def _t_domain_cap_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample; under-cap domains bypass the window sort entirely."""
     from .operators.curation import domain_cap
 
+    # bare scan (r6 A/B): the per-row work is trivial (an md5 only on the
+    # over-cap slice), so spreading measured 2x SLOWER than the single-task
+    # scan at sf0.1 (0.43s -> 0.88s)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return domain_cap(docs, cap=20).select("doc_id", "source")
 
@@ -2678,7 +2698,7 @@ def _t_pii_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     then redact and count."""
     from .operators.curation import pii_scrub
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     d = F.col("doc_id")
     with_pii = docs.select(
         "doc_id",
@@ -2797,7 +2817,7 @@ ORACLES["d_url_dedup"] = _d_url_dedup_duck()
 def _t_tfidf_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import tfidf_topk
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     # corpus size from the parquet FOOTER (metadata read, not a scan) — the
     # bench/driver analog of "ingest already knows n"; the operator then
     # scans the corpus exactly once (plan-tested)
@@ -2860,7 +2880,7 @@ ORACLES["t_mixture_sample"] = _t_mixture_duck()
 def _t_pack_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import pack_sequences
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     return pack_sequences(docs, seq_len=512, num_parts=8)
 
 
@@ -2892,7 +2912,7 @@ ORACLES["t_pack_sequences"] = _t_pack_duck()
 def _t_pack_assign_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import pack_assignments
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     return pack_assignments(docs, seq_len=512, num_parts=8)
 
 
@@ -2935,7 +2955,7 @@ def _t_boilerplate_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     organic 2-doc chunk repeats stay, proving the threshold bites)."""
     from .operators.curation import boilerplate_strip
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     tk = F.split(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " ")
     n_lines = F.ceil(F.size(tk) / F.lit(_CHUNK)).cast("int")
     chunked = docs.select(
@@ -3003,6 +3023,9 @@ ORACLES["t_boilerplate_strip"] = _t_boilerplate_duck()
 def _t_unigram_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import unigram_logprob
 
+    # bare scan (r6 A/B): the token explode is cheap, and spreading measured
+    # a slight net loss (medians 4.4s vs 3.7s under load; 1.58s vs 1.18s in
+    # the clean full-bench window)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return unigram_logprob(docs)
 
@@ -3048,7 +3071,7 @@ _TOKEN_BUDGET = 1300  # splits sf0.01's 20 domains ~6 under / ~14 over, so the
 def _t_token_budget_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import token_budget_select
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     return token_budget_select(docs, budget=_TOKEN_BUDGET)
 
 
@@ -3084,7 +3107,7 @@ def _t_intra_doc_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-doc chunk repeats dedup too."""
     from .operators.curation import intra_doc_dedup
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     tk = F.split(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " ")
     n_lines = F.ceil(F.size(tk) / F.lit(_CHUNK)).cast("int")
     lines_arr = F.transform(
@@ -3149,7 +3172,7 @@ _DSIR_TARGET_LANG = "es"  # minority slice (73/500 docs at sf0.01) as target
 def _t_dsir_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import dsir_weights
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     return dsir_weights(docs, docs.filter(F.col("lang") == _DSIR_TARGET_LANG))
 
 
@@ -3200,7 +3223,7 @@ def _d_quality_canon_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-quality member (id tiebreak) instead of the smallest id."""
     from .operators.dedup import minhash_near_dups, quality_canonical
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = read_spread(spark, f"{sf_dir}/documents.parquet")
     pairs = minhash_near_dups(df, threshold=0.5, k=8, bands=4, fast=False)
     return quality_canonical(df, pairs)
 
@@ -3314,7 +3337,7 @@ _DUP_NGRAM_N = 5
 def _t_dup_ngram_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import dup_ngram_frac
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     return dup_ngram_frac(docs, n=_DUP_NGRAM_N)
 
 
@@ -3366,15 +3389,17 @@ def _s_semantic_dedup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected components, keep min-id per component; returns survivors.
     The cluster-size guard is ON (max_cluster) so the driver hash-verifies
     the guarded production path, not just the unguarded one."""
-    from .operators.similarity import semantic_dedup
+    from .operators.similarity import ivf_centroids, semantic_dedup
 
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    df = read_spread(spark, f"{sf_dir}/embeddings.parquet")
     # tau pinned BELOW the synthetic corpus's max pairwise cosine (~0.51)
     # so the driver hash actually rides on the pair graph + guard keys +
     # component resolution (at tau=0.9 nothing qualifies and the check
-    # degenerates to an identity scan); production tau stays caller-chosen
+    # degenerates to an identity scan); production tau stays caller-chosen.
+    # The centroid sample reads the bare scan (see _s_lsh_fn).
     return semantic_dedup(
         df, tau=0.35, n_centroids=8,
+        centroids=ivf_centroids(_bare(spark, sf_dir, "embeddings"), 8),
         max_cluster=_SEMDEDUP_CAP, sub_planes=_SEMDEDUP_SUB_PLANES,
     ).select("vec_id")
 
@@ -3446,7 +3471,7 @@ ORACLES["s_semantic_dedup"] = _s_semantic_dedup_duck(tau=0.35)
 def _t_bigram_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import bigram_logprob
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     return bigram_logprob(docs)
 
 
@@ -3542,7 +3567,7 @@ _KM_K, _KM_ITERS, _KM_DIM = 4, 2, 64
 def _s_kmeans_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import kmeans_fit
 
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    df = read_spread(spark, f"{sf_dir}/embeddings.parquet")
     assigned, _cent = kmeans_fit(df, k=_KM_K, iters=_KM_ITERS)
     return assigned
 
@@ -3603,7 +3628,7 @@ _NS_K, _NS_BANDS, _NS_TH = 8, 4, 0.5
 def _near_store_parts(spark: SparkSession, sf_dir: str):
     from .operators.dedup import minhash_signatures
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     store_docs = docs.filter(F.col("doc_id") % 3 == 0)
     new_docs = docs.filter(F.col("doc_id") % 3 != 0)
     store_sigs = minhash_signatures(store_docs, k=_NS_K, fast=False)
@@ -3699,7 +3724,7 @@ def _d_near_store_fast_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     values, so the portable d_near_dedup_store carries the exact oracle."""
     from .operators.dedup import near_dedup_against_store, minhash_signatures
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     store_sigs = minhash_signatures(
         docs.filter(F.col("doc_id") % 3 == 0), k=16, fast=True
     )
@@ -3744,7 +3769,7 @@ _G_ABS_RE = "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)"
 
 
 def _g_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
+    return read_spread(spark, f"{sf_dir}/documents.parquet").selectExpr(
         "doc_id", f"{_G_URL} AS url", f"CAST({_G_HTML} AS BINARY) AS html"
     )
 
@@ -3870,7 +3895,7 @@ _G_BLOCK_URL = (
 def _g_blocklist_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.webgraph import blocklist_filter
 
-    pages = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
+    pages = read_spread(spark, f"{sf_dir}/documents.parquet").selectExpr(
         "doc_id", f"{_G_BLOCK_URL} AS url"
     )
     blocked = spark.createDataFrame(
@@ -3977,6 +4002,9 @@ def _g_crawl_diff_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalizer's own behavior is pinned by d_url_dedup)."""
     from .operators.webgraph import crawl_diff
 
+    # bare scan (r6 A/B): spreading each side's (url, text, id) rows measured
+    # 2x SLOWER than the single-task scan at sf0.1 (0.57s -> 1.31s) — the
+    # exchange ships the text payload to parallelize one md5
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
         "doc_id", f"{_G_URL} AS url", "text"
     )
@@ -4206,7 +4234,7 @@ def _g_html_text_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     /non-empty — the WARC->WET step every web corpus pipeline starts from."""
     from .operators.webgraph import html_to_text
 
-    pages = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
+    pages = read_spread(spark, f"{sf_dir}/documents.parquet").selectExpr(
         "doc_id", f"CAST({_G_WET_HTML} AS BINARY) AS html"
     )
     return html_to_text(pages)
@@ -4273,7 +4301,7 @@ def _g_wet_curate_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned and converted exactly once (plan-tested)."""
     from .operators.webgraph import html_to_text
 
-    pages = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
+    pages = read_spread(spark, f"{sf_dir}/documents.parquet").selectExpr(
         "doc_id", f"CAST({_G_WET_HTML} AS BINARY) AS html"
     )
     wet = html_to_text(pages).select("doc_id", "text").localCheckpoint(eager=False)
@@ -4436,7 +4464,7 @@ ORACLES["a_hll_distinct"] = _a_hll_duck()
 def _t_pack_shards_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import pack_shards
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     return pack_shards(docs, seq_len=512, num_parts=8)
 
 
@@ -4494,7 +4522,7 @@ ORACLES["t_pack_shards"] = _t_pack_shards_duck()
 def _t_inverted_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.indexing import inverted_postings
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     return inverted_postings(docs, max_postings=16)
 
 
@@ -4528,7 +4556,7 @@ _BM25_TERMS = ["spark", "filter", "window"]
 def _t_bm25_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.indexing import bm25_topk
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     return bm25_topk(docs, _BM25_TERMS, k=10)
 
 
@@ -4577,12 +4605,9 @@ def _a_cm_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sketches import cm_estimate, cm_sketch
     from .operators.textstats import normalize_for_fingerprint
 
-    from .operators.skew import spread_scan
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
     toks = (
-        spread_scan(docs.select("text"))
-        .select(
+        docs.select(
             F.explode(
                 F.split(normalize_for_fingerprint(F.col("text")), " ")
             ).alias("term")
@@ -4727,7 +4752,7 @@ ORACLES["g_robots_filter"] = _g_robots_duck()
 def _g_dup_ratio_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.webgraph import host_dup_ratio
 
-    pages = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
+    pages = read_spread(spark, f"{sf_dir}/documents.parquet").selectExpr(
         f"{_G_URL} AS url", "text"
     )
     return host_dup_ratio(pages)
@@ -4768,7 +4793,7 @@ def _g_crawl_shards_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import pack_shards
     from .operators.webgraph import html_to_text
 
-    pages = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
+    pages = read_spread(spark, f"{sf_dir}/documents.parquet").selectExpr(
         "doc_id", f"CAST({_G_WET_HTML} AS BINARY) AS html"
     )
     wet = html_to_text(pages).select("doc_id", "text").localCheckpoint(eager=False)

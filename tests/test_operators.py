@@ -584,9 +584,10 @@ def test_near_dup_cosine_degenerate_corpus_bounded(spark):
 
 
 def test_near_dup_cosine_leading_null_embedding(spark):
-    """A null embedding read first must not hide the corpus dimension: both
-    dim probes (the fused (count, dim) aggregate and the n_rows path) skip
-    nulls, so the pair set is the one found without the null row."""
+    """A null embedding read first must not hide the corpus dimension: the
+    signature UDF reads the dimension from the non-null vectors (with or
+    without n_rows), so the pair set is the one found without the null
+    row."""
     from ocr_sam_project_spark.operators.similarity import near_dup_cosine
 
     vec = [1.0, 0.5, -0.25, 0.125]

@@ -131,8 +131,6 @@ def test_extraction_plan_is_shuffle_free(extractions, spark, pages_parquet):
     """Scale guard: the extract stage must be a narrow map — no Exchange."""
     pages = spark.read.parquet(pages_parquet)
     plan = extract_stage(pages)._jdf.queryExecution().executedPlan().toString()
-    # the union of (arrow-map, native-projected quarantine) branches must not
-    # introduce a shuffle
     assert "Exchange" not in plan, plan
 
 
@@ -680,7 +678,7 @@ def test_row_groups_below_reads_footer_errors_as_false(pages_parquet, tmp_path, 
     ArrowInvalid); any other error from the footer read propagates."""
     import pyarrow.parquet as pq
 
-    from ocr_sam_project_spark.pipeline.job import _row_groups_below
+    from ocr_sam_project_spark.sources.io import _row_groups_below
 
     # the 400-page fixture is 2 row groups
     assert _row_groups_below(pages_parquet, 4) is True
@@ -697,16 +695,82 @@ def test_row_groups_below_reads_footer_errors_as_false(pages_parquet, tmp_path, 
         _row_groups_below(pages_parquet, 4)
 
 
+def _scan_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_read_spread_round_robins_a_one_row_group_file(spark, tmp_path):
+    """Fewer row groups than cores: one round-robin Exchange to
+    defaultParallelism, with the projection and the filter pushed below it
+    into the scan."""
+    from ocr_sam_project_spark.sources.io import read_spread, write_pages_parquet
+
+    cores = spark.sparkContext.defaultParallelism
+    if cores < 2:
+        pytest.skip("a one-row-group file is already one split per core")
+    path = write_pages_parquet(str(tmp_path / "one.parquet"), n=64, seed=5,
+                               row_group_size=64)
+    plan = _scan_plan(read_spread(spark, path).filter(F.col("lang") == "es")
+                      .select("url"))
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count(f"RoundRobinPartitioning({cores})") == 1, plan
+    scan = plan.split("FileScan")[1]
+    assert "ReadSchema: struct<url:string,lang:string>" in scan, plan
+    assert "EqualTo(lang,es)" in scan, plan
+
+
+def test_read_spread_leaves_a_many_row_group_input_alone(spark, tmp_path):
+    """At least as many row groups as cores: the plain scan, no Exchange."""
+    from ocr_sam_project_spark.sources.io import read_spread, write_pages_parquet
+
+    cores = spark.sparkContext.defaultParallelism
+    path = write_pages_parquet(str(tmp_path / "many.parquet"), n=16 * cores,
+                               seed=5, row_group_size=16)
+    plan = _scan_plan(read_spread(spark, path))
+    assert "Exchange" not in plan, plan
+
+
+def test_extract_stage_dead_rows_are_error_records(spark, tmp_path):
+    """A page with neither html nor text is written as the empty_document
+    quarantine record extract_document returns, and the stage scans its
+    input once."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_sam_project_spark.extraction.document import _error_record
+    from ocr_sam_project_spark.sources.io import PAGES_ARROW_SCHEMA
+
+    rows = [
+        {"url": "dead://null", "warc_ts": None, "html": None, "text": None, "lang": "es"},
+        {"url": "dead://empty", "warc_ts": None, "html": b"", "text": "  ", "lang": None},
+        {"url": "ok://text", "warc_ts": None, "html": None,
+         "text": "texto util presente aqui", "lang": "es"},
+    ]
+    path = str(tmp_path / "pages.parquet")
+    pq.write_table(pa.Table.from_pylist(rows, schema=PAGES_ARROW_SCHEMA), path)
+    assert _scan_plan(extract_stage(spark.read.parquet(path))).count("FileScan") == 1
+
+    out = str(tmp_path / "out")
+    run_extraction_job(spark, path, out, num_parts=1)
+    written = {r.url: r.asDict() for r in spark.read.parquet(f"{out}/extractions")
+               .filter(F.col("url").startswith("dead://")).collect()}
+    assert set(written) == {"dead://null", "dead://empty"}
+    for r in rows[:2]:
+        want = _error_record(r["url"], r["lang"], "empty_document")
+        got = written[r["url"]]
+        assert {k: got[k] for k in want if k in got} == {
+            k: v for k, v in want.items() if k in got}
+        assert got["personas"] == want["personas_primary"] == []
+
+
 def test_job_arrow_stage_runs_one_python_task_per_core(spark, tmp_path):
     """The extraction's mapInPandas stage runs at most defaultParallelism
     Python tasks: one wave, since each Python task pays a fixed setup cost
     (see _tune_split_size).  The input has more row groups than cores, so
     the split size alone sets the task count.
 
-    The stage is found by its RDD operation graph (a MapInPandas scope).
-    extract_stage unions the Python branch with a native dead-row branch
-    that scans the same files under the same split size, so the stage runs
-    one task per split per scan; the Python tasks are one scan's share."""
+    The stage is found by its RDD operation graph (a MapInPandas scope),
+    and it scans its input once."""
     from ocr_sam_project_spark.sources.io import write_pages_parquet
 
     pages = write_pages_parquet(str(tmp_path / "pages.parquet"), n=400, seed=42,
@@ -732,8 +796,7 @@ def test_job_arrow_stage_runs_one_python_task_per_core(spark, tmp_path):
             arrow.append((ran, dot.count("FileScanRDD [")))
     assert len(arrow) == 1, arrow
     tasks, scans = arrow[0]
-    assert scans >= 1 and tasks % scans == 0, arrow
-    assert tasks // scans <= sc.defaultParallelism, arrow
+    assert scans == 1 and tasks <= sc.defaultParallelism, arrow
 
 
 # --------------------------------------------------------------------------
@@ -853,11 +916,11 @@ def test_job_tier_metrics_rows_equal_summary(spark, all_tiers_run):
 
 def test_job_issues_no_per_tier_count_job(all_tiers_run):
     """Each tier's per-part counts ride its checkpoint job.  The run issues
-    44-46 jobs (robots_filter's own count varies by 2); the bound is the top
+    41-43 jobs (robots_filter's own count varies by 2); the bound is the top
     of that plus 2.  A separate count job per tier, or a chained anti-join
     per tier, pushes it past (that form issued 65)."""
     _, _, jobs = all_tiers_run
-    assert jobs <= 46 + 2
+    assert jobs <= 43 + 2
 
 
 def test_job_leaves_session_confs_unchanged(spark, pages_parquet, tmp_path):

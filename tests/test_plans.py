@@ -128,8 +128,7 @@ def test_bucketed_dedup_anti_join_has_no_exchange(spark, pages_parquet):
 def test_minhash_signatures_shuffle_free(spark):
     """r2 design point: signatures are per-row array_min(transform(...)) —
     NO shingle explode, NO groupBy shuffle (at web scale that shuffle IS
-    the job).  spread_scan may add one round-robin Exchange on tiny local
-    inputs; there must be no aggregate-induced Exchange."""
+    the job).  The operator adds no Exchange at all."""
     from ocr_sam_project_spark.operators.dedup import minhash_signatures
 
     df = spark.range(200).selectExpr(
@@ -137,6 +136,7 @@ def test_minhash_signatures_shuffle_free(spark):
     )
     plan = _plan(minhash_signatures(df, fast=True))
     assert "HashAggregate" not in plan and "Generate" not in plan, plan
+    assert "Exchange" not in plan, plan
 
 
 def test_ivf_assign_is_narrow(spark):
@@ -475,11 +475,7 @@ def test_html_to_text_is_narrow(spark):
         "/root/testdata/sf0.001/documents.parquet"
     ).selectExpr("doc_id", "CAST(text AS BINARY) AS html")
     plan = _plan(html_to_text(pages))
-    # the only allowed exchange is spread_scan's round-robin fan-out of a
-    # single-row-group bench input (a no-op at scale); no KEYED shuffle,
-    # i.e. the operator itself stays narrow
-    assert "hashpartitioning" not in plan, plan
-    assert plan.count("Exchange") <= 1, plan
+    assert plan.count("Exchange") == 0, plan
     assert "Aggregate" not in plan, plan
     assert "Python" not in plan, plan
 
@@ -619,9 +615,9 @@ def test_host_dup_ratio_two_bounded_shuffles(spark):
     df = QUERY_FNS["g_host_dup_ratio"](spark, "/root/testdata/sf0.001")
     plan = _plan(df)
     # (host,fp) distinct pairs then host rollup — two KEYED exchanges, both
-    # with map-side partials, no text column past the first projection;
-    # spread_scan may add one round-robin fan-out on a single-row-group
-    # bench input (no-op at scale)
+    # with map-side partials, no text column past the first projection; the
+    # query's read_spread may add one round-robin fan-out on a
+    # single-row-group bench input (no-op at scale)
     assert plan.count("hashpartitioning") == 2, plan
     assert plan.count("Exchange") <= 3, plan
     assert "Join" not in plan, plan
@@ -687,3 +683,94 @@ def test_inverted_postings_one_shuffle_capped_window(spark):
     keys = set(_re.findall(r"hashpartitioning\(([a-z_]+)#\d+(?:, ([a-z_]+)#\d+)?", plan))
     assert keys <= {("term", "id"), ("term", "")}, (keys, plan)
     assert plan.count("Window [") == 1, plan
+
+
+# --------------------------------------------------------------------------
+# operators are lazy: building one plans nothing and runs no Spark job
+# --------------------------------------------------------------------------
+def _lazy_builds():
+    """(name, build(df, spark)) for every operator that once decided its
+    input's layout itself, at least one per module.  Left out: bm25_topk,
+    tfidf_topk, bigram_logprob, dsir_weights and dup_ngram_frac, whose lazy
+    localCheckpoint creates its RDD at build time, so AQE runs the input's
+    broadcast stage by design."""
+    import numpy as np
+    from pyspark.sql import Row
+
+    from ocr_sam_project_spark.operators import curation as C
+    from ocr_sam_project_spark.operators import dedup as D
+    from ocr_sam_project_spark.operators import indexing as I
+    from ocr_sam_project_spark.operators import similarity as S
+    from ocr_sam_project_spark.operators import webgraph as W
+
+    def _robots(df, spark):
+        rules = W.parse_robots(spark.createDataFrame(
+            [("host1.example.org", "User-agent: *\nDisallow: /d/1\n")],
+            "host string, robots_txt string"))
+        return W.robots_filter(df, rules)
+
+    cents = [Row(cid=0, cvec=[1.0, 0.0, 0.0]), Row(cid=1, cvec=[0.0, 1.0, 1.0])]
+    return [
+        ("extract_links", lambda df, s: W.extract_links(df)),
+        ("blocklist_filter", lambda df, s: W.blocklist_filter(
+            df, s.createDataFrame([("host2.example.org",)], "domain string"))),
+        ("html_to_text", lambda df, s: W.html_to_text(df.drop("text"))),
+        ("host_dup_ratio", lambda df, s: W.host_dup_ratio(df)),
+        ("robots_filter", _robots),
+        ("inverted_postings", lambda df, s: I.inverted_postings(df)),
+        ("line_dedup", lambda df, s: C.line_dedup(df)),
+        ("decontaminate", lambda df, s: C.decontaminate(df, df, n=2)),
+        ("pii_scrub", lambda df, s: C.pii_scrub(df)),
+        ("pack_sequences", lambda df, s: C.pack_sequences(df, seq_len=8)),
+        ("boilerplate_strip", lambda df, s: C.boilerplate_strip(df)),
+        ("token_budget_select", lambda df, s: C.token_budget_select(df, 100)),
+        ("intra_doc_dedup", lambda df, s: C.intra_doc_dedup(df)),
+        ("span_dedup", lambda df, s: C.span_dedup(df, n=2)),
+        ("minhash_signatures", lambda df, s: D.minhash_signatures(df, fast=True)),
+        ("minhash_signatures_portable", lambda df, s: D.minhash_signatures(df)),
+        ("simhash_near_dups", lambda df, s: D.simhash_near_dups(df)),
+        ("topk_cosine", lambda df, s: S.topk_cosine(df, [1.0, 0.0, 0.0])),
+        ("topk_cosine_batch", lambda df, s: S.topk_cosine_batch(df, s.createDataFrame(
+            [(0, [1.0, 0.0, 0.0])], "query_id int, query_vec array<double>"))),
+        ("rhp_signature_table", lambda df, s: S.rhp_signature_table(df, dim=3)),
+        ("rhp_signature_table_by_dim", lambda df, s: S.rhp_signature_table(df)),
+        ("ivf_assign", lambda df, s: S.ivf_assign(df, centroids=cents)),
+        ("kmeans_assign", lambda df, s: S._kmeans_assign(
+            df, np.array([0, 1]), np.array([[1.0, 0.0], [0.0, 1.0], [0.0, 1.0]]),
+            "vec_id", "embedding")),
+        ("topk_cosine_quantized", lambda df, s: S.topk_cosine_quantized(df, [1.0, 0.0, 0.0])),
+    ]
+
+
+@pytest.fixture
+def anti_joined(spark):
+    """A corpus frame whose plan holds a broadcast anti-join: planning its
+    partitions would run the broadcast job.  A fresh frame per test, since
+    a DataFrame caches the RDD it plans."""
+    base = spark.range(64).selectExpr(
+        "id AS doc_id", "id AS vec_id",
+        "concat('https://host', id % 5, '.example.org/d/', id) AS url",
+        "concat('texto numero ', id % 7, ' con palabras\nlinea comun') AS text",
+        "CAST(concat('<p><a href=\"/x', id, '\">ancla</a></p>') AS BINARY) AS html",
+        "concat('dom', id % 3) AS source",
+        "array(CAST(id % 7 AS DOUBLE) + 1.0, 1.0, CAST(id % 3 AS DOUBLE)) AS embedding",
+    )
+    dropped = spark.range(0, 64, 9).selectExpr("id AS doc_id")
+    return base.join(F.broadcast(dropped), "doc_id", "left_anti")
+
+
+@pytest.mark.parametrize("name", [name for name, _ in _lazy_builds()])
+def test_operator_build_runs_no_job(spark, anti_joined, name):
+    """Building an operator over an input with a broadcast in its plan
+    runs no Spark job: operators are lazy transforms and leave the scan
+    layout to the reader (sources.io.read_spread)."""
+    build = dict(_lazy_builds())[name]
+    sc = spark.sparkContext
+    group = f"lazy-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        build(anti_joined, spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == [], name
