@@ -192,6 +192,30 @@ def domain_suffixes(host: Column, max_labels: int = 6) -> Column:
     )
 
 
+def blocklist_hits(
+    df: DataFrame,
+    blocked: DataFrame,
+    url_col: str = "url",
+    key_col: str = "url",
+    max_labels: int = 6,
+) -> DataFrame:
+    """`key_col` of the pages whose url host, or any parent domain of it,
+    appears in `blocked` (one column `domain`, matched lower-cased): the
+    <= max_labels suffixes are generated in codegen, exploded, and probed
+    against the BROADCAST blocklist (UT1 is ~4M rows / tens of MB) with a
+    LEFT SEMI join.  A host can hit via several suffixes, so a key can
+    repeat."""
+    probe = df.select(
+        F.col(key_col),
+        F.explode(domain_suffixes(host_of(F.col(url_col)), max_labels)).alias("_sfx"),
+    )
+    return probe.join(
+        F.broadcast(blocked.select(F.lower("domain").alias("_sfx"))),
+        "_sfx",
+        "left_semi",
+    ).select(key_col)
+
+
 def blocklist_filter(
     df: DataFrame,
     blocked: DataFrame,
@@ -205,25 +229,13 @@ def blocklist_filter(
     lists every CCNet/RefinedWeb derivative consumes.  Pages with no
     parseable host pass (no suffixes -> no hit).
 
-    Scale: the corpus is scanned once and NEVER shuffled — the <=
-    max_labels suffixes are generated in codegen, exploded, probed against
-    the BROADCAST blocklist (UT1 is ~4M rows / tens of MB) with a
-    broadcast LEFT SEMI join, and the resulting hit-id set (dropped pages
-    only — tiny under any sane blocklist) is broadcast back for the LEFT
-    ANTI join.  Both joins are broadcast-hash: zero Exchange on the corpus
+    Scale: the corpus is scanned once and NEVER shuffled — the hit-id set
+    of `blocklist_hits` (dropped pages only, tiny under any sane blocklist)
+    is broadcast back for the LEFT ANTI join: zero Exchange on the corpus
     side.  A hostile blocklist that matches half the crawl would make the
-    hit set corpus-sized — at that point flip the second join to a regular
-    anti-join on id; the default wiring optimizes the real regime (<1%
-    drop rate)."""
-    probe = df.select(
-        F.col(id_col),
-        F.explode(domain_suffixes(host_of(F.col(url_col)), max_labels)).alias("_sfx"),
-    )
-    hits = probe.join(
-        F.broadcast(blocked.select(F.lower("domain").alias("_sfx"))),
-        "_sfx",
-        "left_semi",
-    ).select(id_col)
+    hit set corpus-sized — then flip this join to a regular anti-join on
+    id; the default wiring optimizes the real regime (<1% drop rate)."""
+    hits = blocklist_hits(df, blocked, url_col, id_col, max_labels)
     # no distinct: LEFT ANTI ignores build-side duplicates, and a distinct
     # here would be the only non-broadcast Exchange in the whole plan
     return df.join(F.broadcast(hits), id_col, "left_anti")
@@ -609,43 +621,31 @@ def robots_filter(
     Returns the pages columns plus `allowed` boolean.
 
     The winner is found WITHOUT a struct argmax: each matching rule scores
-    len(prefix)*2 + (1 if allow) — MAX of that integer encodes (longest,
-    tie->allow) and the verdict is just the winner's parity.  One integer
-    MAX per url, no collect_list of rules.
+    len(prefix)*2 + (1 if allow) — the MAX of that integer encodes
+    (longest, tie->allow) and the verdict is just the winner's parity.  No
+    matching rule leaves the MAX null, and null admits.
 
-    Scale shape (100 TB pages, rules table = hosts x tens of rules): pages
-    with a rule-less host BYPASS the whole machinery via a broadcast-able
-    distinct-host anti-join (the common case — most hosts publish no
-    robots or only allow-alls); only the ruled slice pays the host-keyed
-    join (co-partitioned, rule fanout bounded per host) and the url-keyed
-    verdict aggregate, both carrying (url, small-int) payloads, never
-    html.  A mega-host's pages spread over the url aggregate's hash
-    partitioning — per-url groups are rule-count-sized."""
-    path0 = F.regexp_extract(F.col(url_col), r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+(/[^?#]*)?", 1)
-    path = F.when(path0 == "", F.lit("/")).otherwise(path0)
-    keyed = pages.withColumn(
-        "_host", F.nullif(host_of(F.col(url_col)), F.lit(""))
+    One narrow pass over the pages: the rules are grouped once into a
+    per-host `array<struct<prefix, allow>>` (one small aggregate over the
+    rules table), left-joined onto the pages by host, and each row scores
+    its own host's list in codegen; no url is grouped, joined back or
+    unioned.  Scale shape (100 TB pages): a host-keyed left join of
+    per-host rule lists — broadcast while the rule table is small; past
+    the broadcast cap the planner picks a shuffle join on host, where
+    AQE's skew join splits a mega-host's pages."""
+    path = F.regexp_extract(F.col(url_col), r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+(/[^?#]*)?", 1)
+    host_rules = rules.groupBy(F.col("host").alias("_host")).agg(
+        F.collect_list(F.struct("prefix", "allow")).alias("_rules")
     )
-    ruled_hosts = rules.select(F.col("host").alias("_host")).distinct()
-    # rule-less hosts: admitted without touching the join
-    free = keyed.join(ruled_hosts, "_host", "left_anti").withColumn(
-        "allowed", F.lit(True)
+    win = F.array_max(F.transform(
+        F.filter("_rules", lambda r: F.col("_path").startswith(r["prefix"])),
+        lambda r: F.length(r["prefix"]) * 2 + r["allow"].cast("int"),
+    ))
+    return (
+        pages.withColumn("_host", F.nullif(host_of(F.col(url_col)), F.lit("")))
+        # the path rides the join as a column: computed past it, the
+        # optimizer would inline its regexp into the per-rule lambda
+        .withColumn("_path", F.coalesce(F.nullif(path, F.lit("")), F.lit("/")))
+        .join(host_rules, "_host", "left")
+        .select(*pages.columns, F.coalesce(win % 2 == 1, F.lit(True)).alias("allowed"))
     )
-    cand = keyed.join(ruled_hosts, "_host", "left_semi").withColumn("_path", path)
-    scored = (
-        cand.select(url_col, "_host", "_path")
-        .join(rules.withColumnRenamed("host", "_host"), "_host")
-        .filter(F.col("_path").startswith(F.col("prefix")))
-        .groupBy(url_col)
-        .agg(
-            F.max(
-                F.length("prefix") * 2 + F.col("allow").cast("int")
-            ).alias("_win")
-        )
-    )
-    verdict = cand.join(scored, url_col, "left").withColumn(
-        "allowed",
-        F.coalesce(F.col("_win") % 2 == 1, F.lit(True)),
-    )
-    out_cols = pages.columns + ["allowed"]
-    return free.select(*out_cols).unionByName(verdict.select(*out_cols))

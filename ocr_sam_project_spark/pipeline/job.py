@@ -181,16 +181,11 @@ def _nonempty(df: DataFrame) -> DataFrame:
 
 def _blocklist_losers(universe: DataFrame, blocklist: DataFrame) -> DataFrame:
     """Pages whose url host, or any parent domain of it, is listed
-    (UT1-style suffix semantics).  Two broadcast joins, no corpus Exchange."""
-    from ..operators.webgraph import domain_suffixes, host_of
+    (UT1-style suffix semantics).  One broadcast join, no corpus Exchange."""
+    from ..operators.webgraph import blocklist_hits
 
-    listed = F.broadcast(blocklist.select(F.lower("domain").alias("_sfx")))
-    return (
-        universe.select("url", F.explode(domain_suffixes(host_of(F.col("url")))).alias("_sfx"))
-        .join(listed, "_sfx", "left_semi")
-        .select("url")
-        .distinct()  # a host can hit via several suffixes; audit once
-    )
+    # a host can hit via several suffixes; audit once
+    return blocklist_hits(universe, blocklist).distinct()
 
 
 def _robots_losers(universe: DataFrame, robots_rules: DataFrame) -> DataFrame:

@@ -4744,7 +4744,7 @@ def _g_robots_duck() -> str:
 
 
 # robots.txt admission (REP longest-prefix precedence, Allow wins ties;
-# integer-encoded winner, rule-less hosts bypass the join entirely).
+# integer-encoded winner over per-host rule lists joined on host, one pass).
 QUERY_FNS["g_robots_filter"] = _g_robots_fn
 ORACLES["g_robots_filter"] = _g_robots_duck()
 

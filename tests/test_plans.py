@@ -774,3 +774,23 @@ def test_operator_build_runs_no_job(spark, anti_joined, name):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+
+
+def test_robots_filter_is_one_narrow_pass(spark, pages_parquet):
+    """robots_filter scans its pages once: the per-host rule lists join
+    onto the pages by host, so the executed plan holds no Union, no
+    SortMergeJoin, and no aggregate keyed on url."""
+    import re
+
+    from ocr_sam_project_spark.operators.webgraph import parse_robots, robots_filter
+
+    rules = parse_robots(spark.createDataFrame(
+        [("mingob.gob.pa", "User-agent: *\nDisallow: /oficios/000001\nAllow: /oficios/0000011\n")],
+        "host string, robots_txt string"))
+    df = robots_filter(spark.read.parquet(pages_parquet), rules)
+    assert not all(r.allowed for r in df.collect())
+    plan = _plan(df).split("== Initial Plan ==")[0]  # AQE's final plan
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "Union" not in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert not re.search(r"Aggregate\(keys=\[url#", plan), plan

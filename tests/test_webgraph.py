@@ -447,3 +447,63 @@ def test_robots_filter_rep_precedence(spark):
     assert got["https://a.example"] is True  # bare host -> path '/'
     assert got["https://b.example/anything"] is True  # rule-less bypass
     assert got["https://c.example/x"] is True  # host never published robots
+
+
+def _rep_reference(url, rules_by_host):
+    """Pure-Python REP verdict: the longest matching prefix wins, Allow
+    wins a length tie, and a url with no matching rule is admitted."""
+    import re
+
+    host = (re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", url or "") or [None, ""])[1]
+    path = (re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+(/[^?#]*)?", url or "")
+            or [None, None])[1] or "/"
+    hits = [(len(p), a) for p, a in rules_by_host.get(host.lower(), ()) if path.startswith(p)]
+    if not hits:
+        return True
+    longest = max(n for n, _ in hits)
+    return any(a for n, a in hits if n == longest)
+
+
+def test_robots_filter_matches_rep_reference_fuzz(spark):
+    """Seeded fuzz against `_rep_reference`: duplicate urls, null and
+    empty hosts, scheme-less urls, upper-case hosts, query strings and
+    fragments, duplicate rules, allow-only hosts, rule-less hosts, and (in
+    the last trial) an empty rules table.  Compared as a multiset of
+    (url, allowed)."""
+    import random
+    from collections import Counter
+
+    from ocr_sam_project_spark.operators.webgraph import robots_filter
+
+    segs = ["p", "pr", "private", "ok", "x", "a", "d7"]
+
+    def _path(rng):
+        return "/" + "/".join(rng.choice(segs) for _ in range(rng.randint(0, 3)))
+
+    for trial in range(6):
+        rng = random.Random(trial)
+        rules = []
+        if trial < 5:
+            for h in ("a.example", "b.example", "c.example"):
+                rules += [(h, rng.random() < 0.4, _path(rng)) for _ in range(rng.randint(1, 6))]
+            rules += [("allow.example", True, _path(rng)) for _ in range(3)]  # allow-only
+            rules += rules[:3]  # duplicate rules
+        urls = []
+        for _ in range(300):
+            host = rng.choice(["a.example", "b.example", "c.example", "allow.example",
+                               "free.example", ""])
+            host = host.upper() if rng.random() < 0.2 else host
+            scheme = rng.choice(["https://", "http://", "HTTP://", "", "//"])
+            tail = rng.choice(["", "?q=/private", "#private", "?a=1#x"])
+            path = _path(rng) if rng.random() < 0.8 else ""
+            urls.append(None if rng.random() < 0.03 else f"{scheme}{host}{path}{tail}")
+        urls += urls[:40]  # duplicate urls
+        by_host: dict = {}
+        for h, a, p in rules:
+            by_host.setdefault(h, []).append((p, a))
+        want = Counter((u, _rep_reference(u, by_host)) for u in urls)
+        pages = spark.createDataFrame([(u,) for u in urls], "url string")
+        rdf = spark.createDataFrame(rules, "host string, allow boolean, prefix string")
+        got = Counter((r.url, r.allowed) for r in robots_filter(pages, rdf).collect())
+        assert got == want, (trial, (got - want).most_common(3), (want - got).most_common(3))
+        assert trial == 5 or any(not a for _, a in want), trial  # some refusals
