@@ -343,15 +343,18 @@ def resolve_clusters(
     ).localCheckpoint(eager=False)
     lab = ids.withColumn("lbl", F.col("id"))
     converged = False
-    prev_sum = object()  # sentinel: never equal on the first round
     for _ in range(max_iter):
         new = (
             edges.join(
                 lab.select(F.col("id").alias("b"), F.col("lbl").alias("nlbl")), "b"
             )
             .groupBy("a")
-            .agg(F.min("nlbl").alias("lbl"))
-            .select(F.col("a").alias("id"), "lbl")
+            .agg(
+                F.min("nlbl").alias("lbl"),
+                # the self edge carries the node's label from the last round
+                F.min(F.when(F.col("b") == F.col("a"), F.col("nlbl"))).alias("_old"),
+            )
+            .select(F.col("a").alias("id"), "lbl", "_old")
         )
         # pointer jump (path halving): lbl <- label(lbl); labels are always
         # node ids, so `new` doubles as the lookup table
@@ -361,20 +364,17 @@ def resolve_clusters(
             .select(
                 "id",
                 F.least(F.col("lbl"), F.coalesce("_mlbl", F.col("lbl"))).alias("lbl"),
+                "_old",
             )
             .localCheckpoint(eager=False)
         )
-        # convergence via the label sum: every per-node update is F.least, so
-        # labels are monotonically nonincreasing — the sum is unchanged iff NO
-        # label changed.  One aggregate job instead of a join+count per round.
-        # DECIMAL(38,0): exact, and sum(int64 ids) overflows bigint at web
-        # scale (10^12 ids x 10^12 magnitude), which ANSI mode makes an error.
-        cur_sum = new.agg(F.sum(F.col("lbl").cast("decimal(38,0)"))).first()[0]
-        lab = new
-        if cur_sum == prev_sum:
+        # converged iff NO label changed this round: one aggregate job per
+        # round, which also fills the checkpoint, for ids of any type
+        changed = new.agg(F.max(F.col("lbl") != F.col("_old"))).first()[0]
+        lab = new.drop("_old")
+        if not changed:
             converged = True
             break
-        prev_sum = cur_sum
     if not converged:
         warnings.warn(
             f"resolve_clusters: not converged after {max_iter} rounds; "

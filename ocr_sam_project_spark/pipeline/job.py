@@ -5,14 +5,13 @@
 
 Scale design (SURVEY.md §4; graded against the 100 TB target):
 
-* **Tiers before Python.** The optional drop tiers are one ordered list,
-  cheapest first, driven by one loop; every page a tier drops skips the
-  Arrow stage.  A tier maps its universe (the FULL corpus minus every
-  earlier tier's losers) to the urls it drops, so each dropped page is
-  audited exactly once, and a duplicate pair that spans a completed part
-  and a resumed one is still caught.  Each loser set is materialized once
-  (`localCheckpoint`) and its per-part counts ride that same job through
-  `DataFrame.observe`: one Spark action per tier.
+* **Tiers before Python.** The optional drop tiers run as one labelled
+  pass over a narrow frame of the FULL corpus, cheapest first: each row is
+  labelled by the first tier that drops it, so each dropped page skips the
+  Arrow stage and is audited exactly once, and a duplicate pair that spans
+  a completed part and a resumed one is still caught.  The losers are
+  checkpointed once and their per-(tier, part) counts ride that job through
+  `DataFrame.observe`; only the iterative minhash tier adds actions.
 * **Zero-shuffle core.** The extraction stage is a narrow map over Arrow
   batches; the only data movement is the parquet write.
 * **Skew salting.** `part_id = pmod(xxhash64(url), P)` spreads Zipfian hot
@@ -24,8 +23,9 @@ Scale design (SURVEY.md §4; graded against the 100 TB target):
   tracking_service.py:22-82, storage_service.py:68).
 * **Quarantine.** Rows that fail extraction carry an `error` column instead
   of throwing (the DLQ analog, template.yaml:88-107).
-* **Telemetry.** A tier's Spark jobs carry the description `tier:<name>`,
-  and the metrics table gets `tier_sec:<name>` and `tier_losers:<name>` rows.
+* **Telemetry.** The drop pass's Spark jobs carry the description
+  `tier:drop_pass` (minhash's `tier:minhash_dedup`); the metrics table gets
+  one `tier_sec:drop_pass` row and a `tier_losers:<name>` row per tier.
 """
 
 from __future__ import annotations
@@ -35,7 +35,7 @@ import os
 import time
 from collections import Counter
 from datetime import datetime, timezone
-from typing import Callable, NamedTuple, Optional
+from typing import Optional
 
 _TIMING = os.environ.get("SPARK_GRAFT_TIMING") == "1"
 
@@ -64,13 +64,20 @@ _MIN_SPLIT = 64 << 10        # 64 KiB — bench corpora compress hard; a floor
 _MAX_SPLIT = 128 << 20       # Spark default
 _SPLIT_CONF = "spark.sql.files.maxPartitionBytes"
 
-# summary / metrics counters of the drop tiers, in summary order
-_DROP_COUNTERS = ("dups_dropped", "store_dups_dropped", "url_dups_dropped",
-                  "blocked_dropped", "robots_dropped")
+# drop tier, in funnel order -> (summary / metrics counter of its losers,
+# lineage column that audits them; several tiers can share one)
+_TIERS = {
+    "blocklist": ("blocked_dropped", "blocked_dropped"),
+    "robots": ("robots_dropped", "blocked_dropped"),
+    "url_dedup": ("url_dups_dropped", "url_dups_dropped"),
+    "exact_dedup": ("dups_dropped", "dups_dropped"),
+    "minhash_dedup": ("dups_dropped", "dups_dropped"),
+    "store_dedup": ("store_dups_dropped", "dups_dropped"),
+}
+_DROP_COUNTERS = tuple(dict.fromkeys(c for c, _ in _TIERS.values()))
+_LINEAGE_DROPS = tuple(dict.fromkeys(col for _, col in _TIERS.values()))
 # per-part extraction counts, in lineage and metrics
 _STATS = ("docs_in", "segments_out", "errors", "pii_redactions")
-# lineage columns that audit the drops; several tiers can share one
-_LINEAGE_DROPS = ("dups_dropped", "url_dups_dropped", "blocked_dropped")
 
 
 def _tune_split_size(
@@ -147,93 +154,90 @@ def completed_parts(spark: SparkSession, lineage_path: str) -> list[int]:
 
 
 # --------------------------------------------------------------------------
-# drop tiers: universe -> loser urls
+# drop tiers: one labelled pass over a narrow frame of the pages
 # --------------------------------------------------------------------------
-class _Tier(NamedTuple):
-    name: str     # job description and tier_* metric name
-    mark: str     # `_mark` timing label
-    counter: str  # summary / metrics counter of its losers
-    lineage: str  # lineage column that audits its losers
-    losers: Callable[[DataFrame], DataFrame]
-
-
-def _minus(df: DataFrame, losers: Optional[DataFrame]) -> DataFrame:
-    """`df` without the rows whose url is in `losers`.
-
-    Broadcast hint (r6): a checkpointed loser set's size statistic defaults
-    to Long.Max, so unhinted the corpus pays a SortMergeJoin shuffle with
-    its html payload (10.4 s -> 4.7 s dedup extract+write at sf0.1).  The
-    regime is losers << corpus, for the dedup AND the admission tiers.  A
-    high-drop deployment (past the broadcast cap) buckets corpus and losers
-    by url and uses sources.bucketing.bucketed_anti_join: no Exchange at all
-    (test_plans.test_bucketed_dedup_anti_join_has_no_exchange)."""
-    if losers is None:
-        return df
-    return df.join(F.broadcast(losers), "url", "left_anti")
-
-
-def _nonempty(df: DataFrame) -> DataFrame:
-    """Empty/whitespace texts all share one fingerprint but are NOT
-    duplicates of each other: they bypass the text tiers, so each reaches
-    the quarantine branch with its own url/provenance."""
-    return df.filter(F.length(F.trim(F.col("text"))) > 0)
-
-
-def _blocklist_losers(universe: DataFrame, blocklist: DataFrame) -> DataFrame:
-    """Pages whose url host, or any parent domain of it, is listed
-    (UT1-style suffix semantics).  One broadcast join, no corpus Exchange."""
-    from ..operators.webgraph import blocklist_hits
-
-    # a host can hit via several suffixes; audit once
-    return blocklist_hits(universe, blocklist).distinct()
-
-
-def _robots_losers(universe: DataFrame, robots_rules: DataFrame) -> DataFrame:
-    """Pages the REP verdict refuses (`robots_rules` is a parse_robots
-    output: host, allow, prefix)."""
-    from ..operators.webgraph import robots_filter
-
-    return robots_filter(universe.select("url"), robots_rules).filter(~F.col("allowed")).select("url")
-
-
-def _url_losers(universe: DataFrame) -> DataFrame:
-    """Tracking-param/fragment/case variants of one canonical url: all but
-    the min url lose.  One shuffle on a short string; no text is read."""
+def _drop_labels(
+    pages: DataFrame,
+    blocklist: Optional[DataFrame],
+    robots_rules: Optional[DataFrame],
+    url_dedup: bool,
+    dedup: Optional[str],
+    store_path: Optional[str],
+    bloom_bits: int,
+) -> tuple[list[str], DataFrame]:
+    """The enabled drop tiers in funnel order, and the lazy (url, part_id,
+    _tier) rows they drop.  A narrow frame (url, part_id, a non-empty flag,
+    the fingerprint; no text) labels each row with the FIRST tier that drops
+    it; a tier's flags and windows only count the rows no earlier tier
+    labelled.  Empty texts share one fingerprint but are not duplicates, so
+    they bypass the text tiers.  minhash is iterative: it runs its own
+    actions over a checkpoint of the frame (text kept on the live non-empty
+    rows) and comes back as a broadcast flag.  The store tier is last, so it
+    is a union branch; a Bloom filter of `bloom_bits` only prefilters its
+    semi-join (same losers)."""
     from pyspark.sql import Window
 
     from ..operators.curation import canonical_url
+    from ..operators.dedup import bloom_build, bloom_hit, dedup_losers
+    from ..operators.textstats import normalize_for_fingerprint
+    from ..operators.webgraph import blocklist_hits, robots_filter
 
-    return (
-        universe.select("url", canonical_url(F.col("url")).alias("_cu"))
-        .withColumn("_keep", F.min("url").over(Window.partitionBy("_cu")))
-        .filter(F.col("url") != F.col("_keep"))
-        .select("url")
+    text, url = F.col("text"), F.col("url")
+    frame = pages.select(
+        "url", "part_id",
+        F.coalesce(F.length(F.trim(text)) > 0, F.lit(False)).alias("_ne"),
+        F.md5(normalize_for_fingerprint(text)).alias("fp"),
+        *([text] if dedup not in (None, "exact") else []),
+        F.lit(None).cast("string").alias("_tier"),
     )
+    alive = F.col("_tier").isNull()
+    live_text = alive & F.col("_ne")
+    tiers: list[str] = []
 
+    def label(df: DataFrame, name: str, cond: Column) -> DataFrame:
+        tiers.append(name)
+        return df.withColumn("_tier", F.coalesce("_tier", F.when(cond, F.lit(name))))
 
-def _text_losers(universe: DataFrame, method: str) -> DataFrame:
-    from ..operators.dedup import dedup_losers
+    def flagged(df: DataFrame, urls: DataFrame, name: str) -> DataFrame:
+        flags = F.broadcast(urls.select("url", F.lit(True).alias("_hit")))
+        return label(df.join(flags, "url", "left"), name, F.col("_hit")).drop("_hit")
 
-    return dedup_losers(_nonempty(universe), method=method, text_col="text", id_col="url")
+    if blocklist is not None:
+        # a host can hit via several suffixes: one flag per url
+        frame = flagged(frame, blocklist_hits(frame, blocklist).distinct(), "blocklist")
+    if robots_rules is not None:
+        frame = label(robots_filter(frame, robots_rules), "robots", ~F.col("allowed")).drop("allowed")
+    if url_dedup:
+        keep = F.min(F.when(alive, url)).over(Window.partitionBy(canonical_url(url)))
+        frame = label(frame, "url_dedup", url != keep)
+    if dedup == "exact":
+        by_fp = Window.partitionBy("fp")
+        keep = F.min(F.when(live_text, url)).over(by_fp)
+        n = F.count(F.when(live_text, F.lit(1))).over(by_fp)
+        frame = label(frame, "exact_dedup", live_text & (n >= 2) & (url != keep))
+    elif dedup is not None:
+        sc = pages.sparkSession.sparkContext
+        sc.setJobDescription(f"tier:{dedup}_dedup")
+        # the earlier tiers run once, into this checkpoint; the rest of the
+        # pass goes on from it
+        frame = frame.withColumn("text", F.when(live_text, text)).localCheckpoint()
+        docs = frame.filter(live_text).select("url", "text")
+        losers = dedup_losers(docs, method=dedup, text_col="text", id_col="url")
+        sc.setJobDescription("tier:drop_pass")
+        frame = flagged(frame.drop("text"), losers, f"{dedup}_dedup")
 
-
-def _store_losers(universe: DataFrame, store_path: str, bloom_bits: int) -> DataFrame:
-    """Pages whose fingerprint a COMPLETED earlier run put in the store
-    (pruned to its fp column; at 100 TB keep it bucketed by fp).
-
-    With `bloom_bits`, a Bloom filter of the store (one filter-sized
-    shuffle; the bitset rides into the plan as ONE binary literal) passes
-    only its hits to the semi-join, so at store >> batch scale the batch is
-    not shuffled on fp.  No false negatives, and the join removes the false
-    positives: the losers are IDENTICAL (test_job_fp_store_bloom_identical)."""
-    from ..operators.dedup import bloom_build, bloom_hit, corpus_fingerprints
-
-    store = universe.sparkSession.read.parquet(store_path).select("fp")
-    fps = corpus_fingerprints(_nonempty(universe), "text", "url")
+    dropped = frame.filter(~alive).select("url", "part_id", "_tier")
+    if store_path is None:
+        return tiers, dropped
+    # the store's schema is known, so no schema-inference job runs
+    store = pages.sparkSession.read.schema("fp string").parquet(store_path)
+    fresh = frame.filter(live_text)
     if bloom_bits:
-        words = bloom_build(store, m_bits=bloom_bits, k=4)
-        fps = fps.filter(bloom_hit(F.col("fp"), words, bloom_bits, 4))
-    return fps.join(store, "fp", "left_semi").select("url")
+        fresh = fresh.filter(bloom_hit(F.col("fp"), bloom_build(store, m_bits=bloom_bits, k=4),
+                                       bloom_bits, 4))
+    hits = fresh.join(store, "fp", "left_semi")
+    return tiers + ["store_dedup"], dropped.unionByName(
+        hits.select("url", "part_id", F.lit("store_dedup").alias("_tier")))
 
 
 @contextlib.contextmanager
@@ -335,49 +339,42 @@ def run_extraction_job(
                      if p not in done and (only_parts is None or p in only_parts)]
 
         store_on = fp_store_path is not None and _path_exists(spark, fp_store_path)
-        tiers = [tier for on, tier in (
-            (blocklist is not None, _Tier("blocklist", "blocklist", "blocked_dropped",
-             "blocked_dropped", lambda u: _blocklist_losers(u, blocklist))),
-            (robots_rules is not None, _Tier("robots", "robots", "robots_dropped",
-             "blocked_dropped", lambda u: _robots_losers(u, robots_rules))),
-            (url_dedup, _Tier("url_dedup", "url-dedup", "url_dups_dropped",
-             "url_dups_dropped", _url_losers)),
-            (dedup is not None, _Tier(f"{dedup}_dedup", "dedup", "dups_dropped",
-             "dups_dropped", lambda u: _text_losers(u, dedup))),
-            (store_on, _Tier("store_dedup", "store-dedup", "store_dups_dropped",
-             "dups_dropped", lambda u: _store_losers(u, fp_store_path, bloom_bits))),
-        ) if on]
-
-        t0 = time.monotonic()
-        tm = t0
+        t0 = tm = time.monotonic()
         counters = dict.fromkeys(_DROP_COUNTERS, 0)
         lineage_drops = {c: Counter() for c in _LINEAGE_DROPS}
         tier_metrics: list[tuple[str, float]] = []
-        dropped: Optional[DataFrame] = None  # union of the finished tiers' losers
-        pid = _part_id(num_parts)
+        todo = pages.filter(F.col("part_id").isin(run_parts))
+        spark.sparkContext.setJobDescription("tier:drop_pass")
         # a run with no parts left has nothing to drop
-        for tier in tiers if run_parts else ():
-            spark.sparkContext.setJobDescription(f"tier:{tier.name}")
+        tiers, labels = _drop_labels(
+            pages, blocklist, robots_rules, url_dedup, dedup,
+            fp_store_path if store_on else None, bloom_bits,
+        ) if run_parts else ([], None)
+        if tiers:
             obs = Observation()
-            losers = (
-                tier.losers(_minus(pages, dropped))
-                .select("url")
-                .observe(obs, *[F.count_if(pid == p).alias(str(p)) for p in run_parts])
-                .localCheckpoint()  # eager: the tier DAG runs once and fills obs
-            )
-            by_part = {int(p): n for p, n in obs.get.items() if n}
-            lineage_drops[tier.lineage].update(by_part)
-            counters[tier.counter] = n_losers = sum(by_part.values())
-            dropped = losers if dropped is None else dropped.union(losers)
-            t_tier, tm = tm, _mark(tier.mark, tm)
-            tier_metrics += [(f"tier_sec:{tier.name}", tm - t_tier),
-                             (f"tier_losers:{tier.name}", n_losers)]
+            losers = labels.observe(obs, *[
+                F.count_if((F.col("_tier") == t) & (F.col("part_id") == p)).alias(f"{t}:{p}")
+                for t in tiers for p in run_parts
+            ]).localCheckpoint()  # eager: the one drop-pass action fills obs
+            counts = obs.get
+            for t in tiers:
+                counter, lineage = _TIERS[t]
+                by_part = {p: counts[f"{t}:{p}"] for p in run_parts if counts[f"{t}:{p}"]}
+                lineage_drops[lineage].update(by_part)
+                counters[counter] = n_losers = sum(by_part.values())
+                tier_metrics.append((f"tier_losers:{t}", n_losers))
+            tm = _mark("drop_pass", tm)
+            tier_metrics.append(("tier_sec:drop_pass", tm - t0))
+            # hinted: a checkpoint's size statistic is Long.Max, so the corpus
+            # would pay a SortMergeJoin shuffle of its html (r6: 10.4 -> 4.7 s
+            # at sf0.1).  Past the broadcast cap, bucket both sides by url
+            # (sources.bucketing.bucketed_anti_join).
+            todo = todo.join(F.broadcast(losers.select("url")), "url", "left_anti")
         spark.sparkContext.setJobDescription(caller_desc)
 
-        todo = _minus(pages.filter(F.col("part_id").isin(run_parts)), dropped)
         # part_id is a pure function of url, so it is recomputed after the Arrow
         # stage instead of being dragged through it (narrower Arrow batches).
-        extracted = extract_stage(todo, pages_per_doc).withColumn("part_id", pid)
+        extracted = extract_stage(todo, pages_per_doc).withColumn("part_id", _part_id(num_parts))
 
         # --- optional post-extract PII scrub (narrow regexp codegen on the
         # already-small output; counts ride a per-row column into the written
@@ -475,7 +472,8 @@ def run_extraction_job(
             # page writes at least one extraction row, so these are the written
             # urls; in-run losers share their winner's fp and store losers are
             # already present, so neither re-enters.
-            fps = corpus_fingerprints(_nonempty(todo), "text", "url")
+            nonempty = todo.filter(F.length(F.trim(F.col("text"))) > 0)
+            fps = corpus_fingerprints(nonempty, "text", "url")
             fps.write.mode("append").parquet(fp_store_path)
             _mark("fp-store-append", tm)
 

@@ -4065,9 +4065,8 @@ def _g_host_components_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = host_edges(extract_links(_g_pages(spark, sf_dir))).localCheckpoint(
         eager=False
     )
-    # resolve_clusters' convergence certificate (monotone label SUM) needs
-    # NUMERIC labels — hash hosts to the portable 56-bit id space first,
-    # then map component ids back onto host strings
+    # hash hosts to the portable 56-bit id space first (fixed-width ids in
+    # every round's shuffles), then map component ids back onto host strings
     comp = resolve_clusters(
         edges.select(
             hash64(F.col("src_host")).alias("id_a"),

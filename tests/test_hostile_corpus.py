@@ -190,3 +190,35 @@ def test_one_10mb_page(spark, tmp_path):
             for d in extract_document(big["url"], big["html"], big["text"], big["lang"], 1)]
     assert got == sorted(want)
     assert got[0][3] is None
+
+
+def test_blocked_url_on_two_rows(spark, tmp_path):
+    """A blocked url that appears on two rows is two dropped pages: each
+    row is audited once, not the url once."""
+    rows = pages_rows(24, seed=11)
+    spam = dict(rows[0], url="https://ads.spam.example/oferta", html=None,
+                text="contenido de spam repetido")
+    rows += [spam, dict(spam, text="otro texto bajo la misma url")]
+    in_dir = _write(tmp_path, rows)
+    blocked = spark.createDataFrame([("spam.example",)], "domain string")
+    out = str(tmp_path / "out")
+    s = _run_audited(spark, in_dir, out, "bb", len(rows), num_parts=4, blocklist=blocked,
+                     url_dedup=True, dedup="exact")
+    assert s["blocked_dropped"] == 2
+    assert spam["url"] not in _written_urls(spark, out)
+
+
+def test_one_50gram_in_every_document_minhash(spark, tmp_path):
+    """Every document carries the same 50-word passage, so every minhash
+    band sees one hot shingle run: the minhash run finishes, audits every
+    drop once, and drops exactly `dedup_losers(..., "minhash")`."""
+    from ocr_sam_project_spark.operators.dedup import dedup_losers
+
+    gram = " ".join(f"palabra{k}" for k in range(50))
+    rows = [dict(r, html=None, text=f"{r['text'] or ''} {gram}") for r in pages_rows(40, seed=12)]
+    in_dir = _write(tmp_path, rows)
+    out = str(tmp_path / "out")
+    s = _run_audited(spark, in_dir, out, "m1", len(rows), num_parts=4, dedup="minhash")
+    want = dedup_losers(spark.read.parquet(in_dir), "minhash", text_col="text", id_col="url")
+    assert s["dups_dropped"] == want.count()
+    assert _written_urls(spark, out) == {r["url"] for r in rows} - {r.url for r in want.collect()}

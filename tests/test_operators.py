@@ -96,6 +96,20 @@ def test_resolve_clusters_chain_collapses(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (7, 7), (9, 7)}
 
 
+def test_resolve_clusters_string_ids(spark):
+    """String ids (the job passes urls) resolve like numeric ones: the
+    lexicographically smallest id of each component is canonical."""
+    from ocr_sam_project_spark.operators.dedup import resolve_clusters
+
+    pairs = spark.createDataFrame(
+        [("https://b/1", "https://a/1"), ("https://c/1", "https://b/1"), ("x://2", "x://1")],
+        "id_a string, id_b string",
+    )
+    got = {(r.doc_id, r.canonical_id) for r in resolve_clusters(pairs).collect()}
+    assert got == {("https://a/1", "https://a/1"), ("https://b/1", "https://a/1"),
+                   ("https://c/1", "https://a/1"), ("x://1", "x://1"), ("x://2", "x://1")}
+
+
 def test_resolve_clusters_long_path_converges(spark):
     """A 40-node path graph — worst diameter shape — converges within the
     default pointer-jumping round budget to a single min-id cluster."""

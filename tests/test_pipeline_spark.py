@@ -900,8 +900,9 @@ def all_tiers_run(spark, pages_parquet, tmp_path_factory):
 
 
 def test_job_tier_metrics_rows_equal_summary(spark, all_tiers_run):
-    """Every tier writes tier_losers:<name> and tier_sec:<name> rows to the
-    long-format metrics table; the loser rows equal the summary counters."""
+    """Every tier writes a tier_losers:<name> row to the long-format metrics
+    table, equal to its summary counter; the tiers run as one drop pass, so
+    its wall time is one tier_sec:drop_pass row."""
     s, out, _ = all_tiers_run
     m = {r.metric: r.value for r in spark.read.parquet(f"{out}/metrics").collect()}
     tiers = {"blocklist": "blocked_dropped", "robots": "robots_dropped",
@@ -909,19 +910,59 @@ def test_job_tier_metrics_rows_equal_summary(spark, all_tiers_run):
              "store_dedup": "store_dups_dropped"}
     assert {t: m[f"tier_losers:{t}"] for t in tiers} == {t: s[k] for t, k in tiers.items()}
     assert all(s[k] > 0 for k in tiers.values())
-    assert all(m[f"tier_sec:{t}"] > 0 for t in tiers)
+    assert m["tier_sec:drop_pass"] > 0
     assert {k for k in m if k.startswith("tier_")} == (
-        {f"tier_losers:{t}" for t in tiers} | {f"tier_sec:{t}" for t in tiers})
+        {f"tier_losers:{t}" for t in tiers} | {"tier_sec:drop_pass"})
 
 
 def test_job_issues_no_per_tier_count_job(all_tiers_run):
-    """Each tier's per-part counts ride its checkpoint job.  The run issues
-    37-38 jobs (the robots tier issues 5 or 6, as AQE's broadcast of the
-    per-host rule lists lands); the bound is the top of that plus 2.  A
-    separate count job per tier, or a chained anti-join per tier, pushes it
-    past (that form issued 65)."""
+    """Every tier's per-part counts ride the one drop-pass checkpoint job.
+    The run issues 28 jobs (max over 8 runs); the bound is that plus 2.
+    An action per tier (the tier loop this pass replaced issued 37-38) or a
+    separate count job per tier pushes it past."""
     _, _, jobs = all_tiers_run
-    assert jobs <= 38 + 2
+    assert jobs <= 28 + 2
+
+
+def test_job_minhash_tier_matches_dedup_losers(spark, pages_parquet, tmp_path):
+    """An all-tiers run with dedup="minhash" drops exactly the
+    `dedup_losers(..., "minhash")` of the pages the admission and url
+    tiers keep; every other dropped page is theirs or a store hit."""
+    from pyspark.sql import Window
+
+    from ocr_sam_project_spark.operators.curation import canonical_url
+    from ocr_sam_project_spark.operators.dedup import dedup_losers
+    from ocr_sam_project_spark.operators.textstats import normalize_for_fingerprint
+    from ocr_sam_project_spark.operators.webgraph import blocklist_hits, robots_filter
+
+    in_dir, opts = _all_tiers_input(spark, pages_parquet, tmp_path)
+    # the run appends its own fingerprints to the store
+    stored = {r.fp for r in spark.read.parquet(opts["fp_store_path"]).collect()}
+    out = str(tmp_path / "out")
+    s = run_extraction_job(spark, in_dir, out, run_id="mh", **dict(opts, dedup="minhash"))
+
+    pages = spark.read.parquet(in_dir)
+    refused = robots_filter(pages.select("url"), opts["robots_rules"]).filter(~F.col("allowed"))
+    admitted = (pages.join(blocklist_hits(pages, opts["blocklist"]), "url", "left_anti")
+                .join(refused, "url", "left_anti"))
+    keep = F.min("url").over(Window.partitionBy(canonical_url(F.col("url"))))
+    kept = admitted.withColumn("_keep", keep).filter(F.col("url") == F.col("_keep"))
+    nonempty = kept.filter(F.length(F.trim("text")) > 0)
+    want = {r.url for r in dedup_losers(nonempty, "minhash", text_col="text", id_col="url")
+            .collect()}
+
+    urls = lambda df: {r.url for r in df.select("url").collect()}  # noqa: E731
+    dropped = urls(pages) - urls(spark.read.parquet(f"{out}/extractions"))
+    others = dropped - urls(kept)
+    assert want and want <= dropped - others
+    assert s["dups_dropped"] == len(want)
+    store_hits = dropped - others - want
+    assert len(store_hits) == s["store_dups_dropped"]
+    hit_fps = {r.fp for r in pages.filter(F.col("url").isin(list(store_hits)))
+               .select(F.md5(normalize_for_fingerprint(F.col("text"))).alias("fp")).collect()}
+    assert hit_fps <= stored
+    assert len(others) == sum(s[k] for k in ("blocked_dropped", "robots_dropped",
+                                              "url_dups_dropped"))
 
 
 def test_job_leaves_session_confs_unchanged(spark, pages_parquet, tmp_path):

@@ -794,3 +794,67 @@ def test_robots_filter_is_one_narrow_pass(spark, pages_parquet):
     assert "Union" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert not re.search(r"Aggregate\(keys=\[url#", plan), plan
+
+
+def _plan_nodes(node):
+    """Every node of an executed plan, through AQE query stages, reused
+    exchanges and subqueries."""
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    yield node
+    kids = seq(node.children()) + seq(node.subqueries())
+    if node.nodeName() == "AdaptiveSparkPlan":
+        kids.append(node.executedPlan())
+    if node.nodeName().endswith("QueryStage"):
+        kids.append(node.plan())
+    if node.nodeName() == "ReusedExchange":
+        kids.append(node.child())
+    for kid in kids:
+        yield from _plan_nodes(kid)
+
+
+def test_drop_pass_is_lazy_and_ships_no_text(spark, pages_parquet, tmp_path):
+    """The exact-path drop pass over a parquet input runs no Spark job
+    until it is executed, and none of its Exchanges outputs the page text
+    or html: the tiers shuffle only the narrow (url, part_id, flag, fp)
+    frame, even where the robots rules (a LogicalRDD without a size
+    statistic) plan a shuffle join."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_sam_project_spark.operators.dedup import corpus_fingerprints
+    from ocr_sam_project_spark.operators.webgraph import parse_robots
+    from ocr_sam_project_spark.pipeline.job import _drop_labels, with_part_id
+
+    base = pq.read_table(pages_parquet)
+    docs = [r for r in base.to_pylist() if (r["text"] or "").strip()][:4]
+    extra = ([dict(r, url=r["url"] + "?utm_source=feed") for r in docs]
+             + [dict(r, url=f"https://copias.example.net/{k}") for k, r in enumerate(docs)])
+    (tmp_path / "in").mkdir()
+    pq.write_table(base, str(tmp_path / "in" / "base.parquet"))
+    pq.write_table(pa.Table.from_pylist(extra, schema=base.schema), str(tmp_path / "in" / "extra.parquet"))
+    pages = with_part_id(spark.read.parquet(str(tmp_path / "in")), 8)
+    store = str(tmp_path / "fp_store")
+    corpus_fingerprints(pages.limit(20), "text", "url").write.parquet(store)
+    blocked = spark.createDataFrame([("site17.example.com",)], "domain string")
+    rules = parse_robots(spark.createDataFrame(
+        [("mingob.gob.pa", "User-agent: *\nDisallow: /oficios/000001\n")],
+        "host string, robots_txt string"))
+    sc = spark.sparkContext
+    sc.setJobGroup("lazy-drop-pass", "lazy-drop-pass")
+    try:
+        tiers, losers = _drop_labels(pages, blocked, rules, True, "exact", store, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("lazy-drop-pass") == []
+    assert tiers == ["blocklist", "robots", "url_dedup", "exact_dedup", "store_dedup"]
+
+    assert {r._tier for r in losers.collect()} == set(tiers)
+    exchanges = [n for n in _plan_nodes(losers._jdf.queryExecution().executedPlan())
+                 if "Exchange" in n.nodeName() and n.nodeName() != "ReusedExchange"]
+    assert exchanges
+    for ex in exchanges:
+        cols = {a.name() for a in (ex.output().apply(i) for i in range(ex.output().size()))}
+        assert not cols & {"text", "html"}, ex.toString()
