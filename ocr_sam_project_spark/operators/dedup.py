@@ -891,8 +891,8 @@ def bloom_build(
     16 K longs.  Sizing: ~10 bits per stored fp gives ~1% FP at k=4-7.
     bloom_hit ships the bitset as one m_bits/8-byte binary literal inside
     every task's plan, so it suits filters up to a few MB (m ~ 2^24, ~10^6
-    stored fps); a bigger bitset belongs in bloom_probe_arrow, which ships
-    it once per executor as a broadcast."""
+    stored fps); a bigger bitset would have to ship once per executor as a
+    broadcast instead of as a plan literal."""
     n_words = (m_bits + 63) // 64
     rows = (
         fp_store.select(
@@ -1023,63 +1023,3 @@ def dedup_against_store_bloom(
     )
     return misses.unionByName(hits_kept)
 
-
-def bloom_probe_arrow(
-    df: DataFrame,
-    words: list[int],
-    m_bits: int,
-    k: int,
-    fp_col: str = "_fp",
-    out_col: str = "_hit",
-) -> DataFrame:
-    """Jumbo-bitset probe: bloom_hit embeds the bitset in the plan as one
-    m_bits/8-byte binary literal, which every task deserializes — fine at
-    a few MB, not at 2^27 bits and up (16 MB of plan per task).  Here the
-    bitset rides a TorrentBroadcast (shipped to each executor once, shared
-    by all its tasks) and the probe is an Arrow-batched numpy pass:
-    vectorized md5 via hashlib over the batch, k position extractions, two
-    fancy-indexing lookups — no join, no shuffle, and memory bounded by
-    (batch x k) int64s.  Semantics are
-    BIT-IDENTICAL to bloom_hit (same md5-portable hash family; pinned by
-    test_bloom_arrow_matches_literal_path), so the exact-verify identity
-    theorem carries over unchanged.
-
-    At 100 TB: a 10^10-fp store at ~10 bits/fp is a 12.5 GB bitset —
-    beyond driver literals but fine as a broadcast on 64-128 GB executors;
-    beyond THAT, shard the store by fp prefix and run one bloom per shard
-    (the probe composes: hit = hit_any_shard only when shards partition
-    the fp space, which a prefix shard does)."""
-    import numpy as np
-
-    from pyspark.sql import types as T
-
-    sc = df.sparkSession.sparkContext
-    arr = np.array(words, dtype=np.int64)
-    b_words = sc.broadcast(arr)
-    fields = df.schema.fields
-    out_schema = T.StructType(fields + [T.StructField(out_col, T.BooleanType())])
-    cols = [f.name for f in fields]
-
-    def probe(batches):
-        import hashlib
-
-        w = b_words.value
-        for pdf in batches:
-            fps = pdf[fp_col].astype(str).to_numpy()
-            hit = np.ones(len(pdf), dtype=bool)
-            for j in range(k):
-                suffix = f":{j}".encode()
-                pos = np.fromiter(
-                    (
-                        int(hashlib.md5(f.encode() + suffix).hexdigest()[:14], 16)
-                        % m_bits
-                        for f in fps
-                    ),
-                    dtype=np.int64,
-                    count=len(fps),
-                )
-                hit &= (w[pos >> 6] >> (pos & 63)) & 1 == 1
-            pdf[out_col] = hit
-            yield pdf
-
-    return df.mapInPandas(probe, schema=out_schema)

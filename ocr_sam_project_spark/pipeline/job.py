@@ -1,17 +1,20 @@
-"""End-to-end extraction job: scan -> drop tiers -> extract -> write -> lineage.
+"""End-to-end extraction job: scan -> page ledger -> extract -> write -> lineage.
 
     blocklist -> robots -> url_dedup -> {exact|minhash}_dedup -> store_dedup
       -> mapInPandas extract -> [pii scrub] -> parquet write -> lineage/metrics
 
 Scale design (SURVEY.md §4; graded against the 100 TB target):
 
-* **Tiers before Python.** The optional drop tiers run as one labelled
-  pass over a narrow frame of the FULL corpus, cheapest first: each row is
+* **One page ledger.** The optional drop tiers run as one labelled pass
+  over a narrow frame of the FULL corpus, cheapest first: each row is
   labelled by the first tier that drops it, so each dropped page skips the
   Arrow stage and is audited exactly once, and a duplicate pair that spans
   a completed part and a resumed one is still caught.  The losers are
-  checkpointed once and their per-(tier, part) counts ride that job through
-  `DataFrame.observe`; only the iterative minhash tier adds actions.
+  checkpointed once, and the per-part page and loser counts ride that one
+  action through `DataFrame.observe`; only the iterative minhash tier adds
+  actions.  The write observes its own per-part segment, error and PII
+  counts, so the job never reads back what it wrote, and the fp-store
+  append reuses the ledger's fingerprints.
 * **Zero-shuffle core.** The extraction stage is a narrow map over Arrow
   batches; the only data movement is the parquet write.
 * **Skew salting.** `part_id = pmod(xxhash64(url), P)` spreads Zipfian hot
@@ -33,7 +36,6 @@ from __future__ import annotations
 import contextlib
 import os
 import time
-from collections import Counter
 from datetime import datetime, timezone
 from typing import Optional
 
@@ -154,27 +156,30 @@ def completed_parts(spark: SparkSession, lineage_path: str) -> list[int]:
 
 
 # --------------------------------------------------------------------------
-# drop tiers: one labelled pass over a narrow frame of the pages
+# the page ledger: one labelled pass over a narrow frame of the pages
 # --------------------------------------------------------------------------
 def _drop_labels(
     pages: DataFrame,
+    run_parts: list[int],
     blocklist: Optional[DataFrame],
     robots_rules: Optional[DataFrame],
     url_dedup: bool,
     dedup: Optional[str],
     store_path: Optional[str],
     bloom_bits: int,
-) -> tuple[list[str], DataFrame]:
-    """The enabled drop tiers in funnel order, and the lazy (url, part_id,
-    _tier) rows they drop.  A narrow frame (url, part_id, a non-empty flag,
-    the fingerprint; no text) labels each row with the FIRST tier that drops
-    it; a tier's flags and windows only count the rows no earlier tier
-    labelled.  Empty texts share one fingerprint but are not duplicates, so
-    they bypass the text tiers.  minhash is iterative: it runs its own
-    actions over a checkpoint of the frame (text kept on the live non-empty
-    rows) and comes back as a broadcast flag.  The store tier is last, so it
-    is a union branch; a Bloom filter of `bloom_bits` only prefilters its
-    semi-join (same losers)."""
+) -> tuple[list[str], Observation, DataFrame]:
+    """The run's page ledger: the enabled tiers in funnel order, an
+    Observation of `docs_in:p` (kept pages of run part p) and `<tier>:p`,
+    and the lazy ledger rows.  Each page of the corpus is labelled with the
+    FIRST tier that drops it (`_tier` null: kept) over a narrow frame of
+    (url, part_id, fp); `fp` is the md5 of the normalized text, null for an
+    empty text, which is no one's duplicate.  A tier only counts the live
+    rows, unlabelled with an fp.  minhash runs its own actions over a
+    checkpoint of the frame and comes back as a url flag, as the store tier
+    does (a Bloom filter of `bloom_bits` only prefilters its semi-join; a
+    MISSING store means first crawl).  The rows are the losers plus, when
+    `store_path` is given, the kept pages of the run parts with their fp
+    for the store append; with neither, the pass reads only `url`."""
     from pyspark.sql import Window
 
     from ..operators.curation import canonical_url
@@ -185,13 +190,12 @@ def _drop_labels(
     text, url = F.col("text"), F.col("url")
     frame = pages.select(
         "url", "part_id",
-        F.coalesce(F.length(F.trim(text)) > 0, F.lit(False)).alias("_ne"),
-        F.md5(normalize_for_fingerprint(text)).alias("fp"),
+        F.when(F.length(F.trim(text)) > 0, F.md5(normalize_for_fingerprint(text))).alias("fp"),
         *([text] if dedup not in (None, "exact") else []),
         F.lit(None).cast("string").alias("_tier"),
     )
     alive = F.col("_tier").isNull()
-    live_text = alive & F.col("_ne")
+    live = alive & F.col("fp").isNotNull()
     tiers: list[str] = []
 
     def label(df: DataFrame, name: str, cond: Column) -> DataFrame:
@@ -199,12 +203,12 @@ def _drop_labels(
         return df.withColumn("_tier", F.coalesce("_tier", F.when(cond, F.lit(name))))
 
     def flagged(df: DataFrame, urls: DataFrame, name: str) -> DataFrame:
-        flags = F.broadcast(urls.select("url", F.lit(True).alias("_hit")))
-        return label(df.join(flags, "url", "left"), name, F.col("_hit")).drop("_hit")
+        # an IN-subquery plans a broadcast existence join: a url that `urls`
+        # holds twice cannot fan out the frame the way a left join would
+        return label(df, name, url.isin(F.broadcast(urls.select("url"))))
 
     if blocklist is not None:
-        # a host can hit via several suffixes: one flag per url
-        frame = flagged(frame, blocklist_hits(frame, blocklist).distinct(), "blocklist")
+        frame = flagged(frame, blocklist_hits(frame, blocklist), "blocklist")
     if robots_rules is not None:
         frame = label(robots_filter(frame, robots_rules), "robots", ~F.col("allowed")).drop("allowed")
     if url_dedup:
@@ -212,32 +216,41 @@ def _drop_labels(
         frame = label(frame, "url_dedup", url != keep)
     if dedup == "exact":
         by_fp = Window.partitionBy("fp")
-        keep = F.min(F.when(live_text, url)).over(by_fp)
-        n = F.count(F.when(live_text, F.lit(1))).over(by_fp)
-        frame = label(frame, "exact_dedup", live_text & (n >= 2) & (url != keep))
+        keep = F.min(F.when(live, url)).over(by_fp)
+        n = F.count(F.when(live, F.lit(1))).over(by_fp)
+        frame = label(frame, "exact_dedup", live & (n >= 2) & (url != keep))
     elif dedup is not None:
         sc = pages.sparkSession.sparkContext
         sc.setJobDescription(f"tier:{dedup}_dedup")
         # the earlier tiers run once, into this checkpoint; the rest of the
         # pass goes on from it
-        frame = frame.withColumn("text", F.when(live_text, text)).localCheckpoint()
-        docs = frame.filter(live_text).select("url", "text")
+        frame = frame.withColumn("text", F.when(live, text)).localCheckpoint()
+        docs = frame.filter(live).select("url", "text")
         losers = dedup_losers(docs, method=dedup, text_col="text", id_col="url")
         sc.setJobDescription("tier:drop_pass")
         frame = flagged(frame.drop("text"), losers, f"{dedup}_dedup")
+    if store_path is not None and _path_exists(pages.sparkSession, store_path):
+        # the store's schema is known, so no schema-inference job runs
+        store = pages.sparkSession.read.schema("fp string").parquet(store_path)
+        fresh = frame.filter(live)
+        if bloom_bits:
+            fresh = fresh.filter(bloom_hit(F.col("fp"), bloom_build(store, m_bits=bloom_bits, k=4),
+                                           bloom_bits, 4))
+        frame = flagged(frame, fresh.join(store, "fp", "left_semi"), "store_dedup")
 
-    dropped = frame.filter(~alive).select("url", "part_id", "_tier")
-    if store_path is None:
-        return tiers, dropped
-    # the store's schema is known, so no schema-inference job runs
-    store = pages.sparkSession.read.schema("fp string").parquet(store_path)
-    fresh = frame.filter(live_text)
-    if bloom_bits:
-        fresh = fresh.filter(bloom_hit(F.col("fp"), bloom_build(store, m_bits=bloom_bits, k=4),
-                                       bloom_bits, 4))
-    hits = fresh.join(store, "fp", "left_semi")
-    return tiers + ["store_dedup"], dropped.unionByName(
-        hits.select("url", "part_id", F.lit("store_dedup").alias("_tier")))
+    part = F.col("part_id")
+    in_ledger = ~alive
+    if store_path is not None:
+        in_ledger |= live & part.isin(run_parts)
+    obs = Observation()
+    ledger = frame.select(
+        "url", "part_id", "_tier", *(["fp"] if store_path is not None else [])
+    ).observe(obs, *[
+        F.count_if(cond & (part == p)).alias(f"{name}:{p}")
+        for name, cond in [("docs_in", alive), *[(t, F.col("_tier") == t) for t in tiers]]
+        for p in run_parts
+    ]).filter(in_ledger)
+    return tiers, obs, ledger
 
 
 @contextlib.contextmanager
@@ -309,6 +322,10 @@ def run_extraction_job(
     `store_dups_dropped`); lineage audits them per part in `blocked_dropped`
     (blocklist + robots), `url_dups_dropped` and `dups_dropped` (text +
     store).  A part whose every page was dropped still completes.
+    `docs_in` counts the pages that entered the extraction, so input rows =
+    `docs_in` + every tier's losers.  A url on several rows is extracted
+    once per row: the losers are keyed by url, so no tier drops one of two
+    rows that share a url and a text.
 
     `pii_scrub` redacts emails / phone numbers / cedula IDs from the
     extracted text (regexp codegen on the output; the input is untouched)
@@ -337,39 +354,43 @@ def run_extraction_job(
         done = set(completed_parts(spark, lineage_path))
         run_parts = [p for p in range(num_parts)
                      if p not in done and (only_parts is None or p in only_parts)]
-
-        store_on = fp_store_path is not None and _path_exists(spark, fp_store_path)
-        t0 = tm = time.monotonic()
         counters = dict.fromkeys(_DROP_COUNTERS, 0)
-        lineage_drops = {c: Counter() for c in _LINEAGE_DROPS}
-        tier_metrics: list[tuple[str, float]] = []
-        todo = pages.filter(F.col("part_id").isin(run_parts))
+        summary = {"run_id": run_id, **dict.fromkeys(_STATS, 0), **counters,
+                   "skipped_parts": sorted(done), "elapsed_sec": 0.0}
+        if not run_parts:
+            return summary
+
+        t0 = tm = time.monotonic()
         spark.sparkContext.setJobDescription("tier:drop_pass")
-        # a run with no parts left has nothing to drop
-        tiers, labels = _drop_labels(
-            pages, blocklist, robots_rules, url_dedup, dedup,
-            fp_store_path if store_on else None, bloom_bits,
-        ) if run_parts else ([], None)
+        tiers, obs, ledger = _drop_labels(
+            pages, run_parts, blocklist, robots_rules, url_dedup, dedup, fp_store_path, bloom_bits)
+        ledger = ledger.localCheckpoint()  # eager: the one drop-pass action fills obs
+        n = obs.get
+        tm = _mark("drop_pass", tm)
+        per_part, tier_metrics = {}, []
+        for t in tiers:
+            n_losers = sum(n[f"{t}:{p}"] for p in run_parts)
+            counters[_TIERS[t][0]] += n_losers
+            tier_metrics.append((f"tier_losers:{t}", n_losers))
         if tiers:
-            obs = Observation()
-            losers = labels.observe(obs, *[
-                F.count_if((F.col("_tier") == t) & (F.col("part_id") == p)).alias(f"{t}:{p}")
-                for t in tiers for p in run_parts
-            ]).localCheckpoint()  # eager: the one drop-pass action fills obs
-            counts = obs.get
-            for t in tiers:
-                counter, lineage = _TIERS[t]
-                by_part = {p: counts[f"{t}:{p}"] for p in run_parts if counts[f"{t}:{p}"]}
-                lineage_drops[lineage].update(by_part)
-                counters[counter] = n_losers = sum(by_part.values())
-                tier_metrics.append((f"tier_losers:{t}", n_losers))
-            tm = _mark("drop_pass", tm)
             tier_metrics.append(("tier_sec:drop_pass", tm - t0))
+        for p in run_parts:
+            drops = {c: sum(n[f"{t}:{p}"] for t in tiers if _TIERS[t][1] == c)
+                     for c in _LINEAGE_DROPS}
+            # every run part that holds a page completes, also one whose every
+            # page a tier dropped: else each resume would re-run it (and
+            # re-count its losers) forever
+            if n[f"docs_in:{p}"] or any(drops.values()):
+                per_part[p] = {"docs_in": n[f"docs_in:{p}"], **drops}
+
+        part, alive = F.col("part_id"), F.col("_tier").isNull()
+        todo = pages.filter(part.isin(run_parts))
+        if tiers:
             # hinted: a checkpoint's size statistic is Long.Max, so the corpus
             # would pay a SortMergeJoin shuffle of its html (r6: 10.4 -> 4.7 s
             # at sf0.1).  Past the broadcast cap, bucket both sides by url
             # (sources.bucketing.bucketed_anti_join).
-            todo = todo.join(F.broadcast(losers.select("url")), "url", "left_anti")
+            todo = todo.join(F.broadcast(ledger.filter(~alive).select("url")), "url", "left_anti")
         spark.sparkContext.setJobDescription(caller_desc)
 
         # part_id is a pure function of url, so it is recomputed after the Arrow
@@ -377,8 +398,8 @@ def run_extraction_job(
         extracted = extract_stage(todo, pages_per_doc).withColumn("part_id", _part_id(num_parts))
 
         # --- optional post-extract PII scrub (narrow regexp codegen on the
-        # already-small output; counts ride a per-row column into the written
-        # table so the lineage rollup needs no extra pass) ---------------------
+        # already-small output; a per-row column carries the counts into the
+        # written table and the write's stats) ------------------------------
         if pii_scrub:
             from ..operators.curation import PII_CEDULA_RE, PII_EMAIL_RE, PII_PHONE_RE
 
@@ -400,14 +421,23 @@ def run_extraction_job(
                 F.when(t.isNull(), t).otherwise(F.regexp_replace(after_phone, PII_CEDULA_RE, "<ID>")),
             )
 
-        # One explicit shuffle of the EXTRACTED rows (boilerplate already
-        # stripped — far smaller than the input html) clusters each lineage
-        # partition into a single output file.  Without it, every map task
-        # writes a file into every partition dir: M x P tiny files, and the
-        # file-commit + later scans dominate wall-clock (measured 44s write /
-        # 31s read-back vs 7s/0.4s at bench scale).
+        # One explicit shuffle of the EXTRACTED rows (far smaller than the
+        # input html) clusters each lineage partition into a single output
+        # file; without it every map task writes a file into every partition
+        # dir (measured 44s write vs 7s at bench scale).  The per-part stats
+        # are observed above the shuffle, in the write's result stage, so
+        # each task's counts apply once even if a map stage is retried.
+        wobs = Observation()
+        pii = F.col("pii_redactions") if pii_scrub else F.lit(0)
         (
-            extracted.repartition(num_parts, F.col("part_id"))
+            extracted.repartition(num_parts, part)
+            .observe(wobs, *[
+                agg.alias(f"{name}:{p}") for p in run_parts for name, agg in [
+                    ("segments_out", F.count_if(part == p)),
+                    ("errors", F.count_if((part == p) & F.col("error").isNotNull())),
+                    ("pii_redactions", F.coalesce(F.sum(F.when(part == p, pii)), F.lit(0))),
+                ]
+            ])
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("part_id")
@@ -415,49 +445,20 @@ def run_extraction_job(
         )
         elapsed = time.monotonic() - t0
         tm = _mark("extract+write", tm)
-
-        # lineage rollup from the *written* table (cheap column-pruned scan of
-        # the much smaller output — the input is never re-scanned) — set-based
-        # counters, not per-row RMW (A3/K5, crm_integrator/app.py:785-807).
-        # explicit schema: a run whose every page was dropped writes an EMPTY
-        # partitioned dir, where schema inference would throw
-        written = spark.read.schema(extracted.schema).parquet(extractions_path)
-        pii_agg = F.sum("pii_redactions") if pii_scrub else F.lit(0).cast("long")
-        stats_rows = (
-            written.filter(F.col("part_id").isin(run_parts))
-            .groupBy("part_id")
-            .agg(
-                F.countDistinct("url").alias("docs_in"),
-                F.count("*").alias("segments_out"),
-                F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("errors"),
-                pii_agg.alias("pii_redactions"),
-            )
-            .collect()
-        )
-        tm = _mark("stats", tm)
-        per_part = {r.part_id: {k: r[k] or 0 for k in _STATS} for r in stats_rows}
-        # a partition whose EVERY page a tier dropped writes zero output rows
-        # and so never appears in the written table — it is still COMPLETE, and
-        # without a lineage row every resume would re-run it (and re-count its
-        # losers in the metrics) forever
-        for p in set().union(*lineage_drops.values()):
-            per_part.setdefault(p, dict.fromkeys(_STATS, 0))
-        totals = {k: sum(v[k] for v in per_part.values()) for k in _STATS}
-        summary = {
-            "run_id": run_id, **totals, **counters, "skipped_parts": sorted(done),
-            "elapsed_sec": elapsed if per_part else 0.0,
-        }
         if not per_part:
             return summary
 
+        w = wobs.get
+        for p, row in per_part.items():
+            row.update({k: w[f"{k}:{p}"] for k in ("segments_out", "errors", "pii_redactions")})
+        summary.update({k: sum(v[k] for v in per_part.values()) for k in _STATS},
+                       **counters, elapsed_sec=elapsed)
         _append_rows(spark, [
-            {"part_id": p, "status": "completed", **v,
-             **{c: lineage_drops[c][p] for c in _LINEAGE_DROPS},
-             "run_id": run_id, "updated_at": ts}
+            {"part_id": p, "status": "completed", **v, "run_id": run_id, "updated_at": ts}
             for p, v in sorted(per_part.items())
         ], LINEAGE_SCHEMA, lineage_path)
         metrics = [(k, summary[k]) for k in (*_STATS, *_DROP_COUNTERS, "elapsed_sec")]
-        metrics.append(("docs_per_sec", totals["docs_in"] / elapsed if elapsed > 0 else 0.0))
+        metrics.append(("docs_per_sec", summary["docs_in"] / elapsed if elapsed > 0 else 0.0))
         _append_rows(spark, [
             {"run_id": run_id, "metric": m, "value": float(v), "updated_at": ts}
             for m, v in metrics + tier_metrics
@@ -465,16 +466,10 @@ def run_extraction_job(
         tm = _mark("metrics+lineage-write", tm)
 
         if fp_store_path is not None:
-            from ..operators.dedup import corpus_fingerprints
-
-            # append the fingerprints of everything THIS run processed, so the
-            # next crawl's store probe sees this run as completed.  Every todo
-            # page writes at least one extraction row, so these are the written
-            # urls; in-run losers share their winner's fp and store losers are
-            # already present, so neither re-enters.
-            nonempty = todo.filter(F.length(F.trim(F.col("text"))) > 0)
-            fps = corpus_fingerprints(nonempty, "text", "url")
-            fps.write.mode("append").parquet(fp_store_path)
+            # the kept pages' fingerprints, so the next crawl's store probe
+            # sees this run as completed; in-run losers share their winner's
+            # fp and store losers are already present, so neither re-enters
+            ledger.filter(alive).select("url", "fp").write.mode("append").parquet(fp_store_path)
             _mark("fp-store-append", tm)
 
         return summary

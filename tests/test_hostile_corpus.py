@@ -1,6 +1,7 @@
 """Hostile corpora through the extraction job: every page blocked, every
 page robots-disallowed, every page a text duplicate, a part that dedup
-leaves empty, a zero-row fingerprint store, and one 10 MB page.
+leaves empty, a zero-row fingerprint store, one 10 MB page, and one url
+on two rows.
 
 Each run must finish and audit every dropped page exactly once: the
 lineage drop columns equal the summary counters, and extracted plus
@@ -222,3 +223,15 @@ def test_one_50gram_in_every_document_minhash(spark, tmp_path):
     want = dedup_losers(spark.read.parquet(in_dir), "minhash", text_col="text", id_col="url")
     assert s["dups_dropped"] == want.count()
     assert _written_urls(spark, out) == {r["url"] for r in rows} - {r.url for r in want.collect()}
+
+
+def test_url_repeated_in_one_batch(spark, tmp_path):
+    """The same page crawled twice in one batch (one url, one text, two
+    rows) is extracted once per row: the losers are keyed by url, so no
+    tier drops one of the two rows, and each row is a page in."""
+    rows = pages_rows(8, seed=3)
+    rows.append(dict(rows[0]))
+    in_dir = _write(tmp_path, rows)
+    s = _run_audited(spark, in_dir, str(tmp_path / "out"), "rp", len(rows), num_parts=4,
+                     dedup="exact", url_dedup=True)
+    assert s["docs_in"] == len(rows)

@@ -1224,50 +1224,16 @@ def test_bloom_precomputed_words_skip_store_build(spark):
     assert sorted(r.doc_id for r in out.collect()) == [101]
 
 
-def test_bloom_arrow_matches_literal_path(spark):
-    """The jumbo-bitset Arrow probe must be bit-identical to the codegen
-    literal-array probe — same md5-portable hash family, same verdicts —
-    so the exact-verify identity theorem carries to broadcast-sized
-    bitsets."""
-    import pyspark.sql.functions as F
-    from ocr_sam_project_spark.operators.dedup import (
-        bloom_build, bloom_hit, bloom_probe_arrow, corpus_fingerprints)
-
-    docs = spark.createDataFrame(
-        [(i, f"text body {i % 23} variant {i % 7}") for i in range(200)],
-        "doc_id int, text string",
-    )
-    store = corpus_fingerprints(docs.filter("doc_id % 4 = 0")).select("fp")
-    M, K = 512, 4  # undersized on purpose: FPs must agree too
-    words = bloom_build(store, m_bits=M, k=K)
-    fps = docs.select(
-        "doc_id",
-        F.md5(F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))).alias("_fp"),
-    )
-    lit = {
-        r.doc_id: r.hit
-        for r in fps.select(
-            "doc_id", bloom_hit(F.col("_fp"), words, M, K).alias("hit")
-        ).collect()
-    }
-    arrow = {
-        r.doc_id: r._hit
-        for r in bloom_probe_arrow(fps, words, M, K).collect()
-    }
-    assert lit == arrow
-    assert any(lit.values()) and not all(lit.values())  # both verdicts occur
-
-
 @pytest.mark.parametrize("m_bits", [256, 1 << 20])
-def test_bloom_hit_agrees_with_arrow_and_python_twin(spark, m_bits):
+def test_bloom_hit_agrees_with_python_twin(spark, m_bits):
     """The binary-literal probe must give, row for row, the verdicts of the
-    Arrow probe and of the pure-Python hash twin — at the production filter
-    size and at an undersized one where false positives occur — and
-    bloom_build's words must equal a pure-Python build of the same store."""
+    pure-Python hash twin — at the production filter size and at an
+    undersized one where false positives occur — and bloom_build's words
+    must equal a pure-Python build of the same store."""
     from test_properties import _bloom_positions_py
 
     from ocr_sam_project_spark.operators.dedup import (
-        bloom_build, bloom_hit, bloom_probe_arrow, corpus_fingerprints)
+        bloom_build, bloom_hit, corpus_fingerprints)
 
     docs = spark.createDataFrame(
         [(i, f"bloom batch text {i}") for i in range(300)], "doc_id int, text string"
@@ -1288,13 +1254,12 @@ def test_bloom_hit_agrees_with_arrow_and_python_twin(spark, m_bits):
             "doc_id", "_fp", bloom_hit(F.col("_fp"), words, m_bits, 4).alias("hit")
         ).collect()
     }
-    arrow = {r.doc_id: r._hit for r in bloom_probe_arrow(fps, words, m_bits, 4).collect()}
     fp_of = {r.doc_id: r._fp for r in fps.collect()}
     twin = {
         i: all((py_words[p >> 6] >> (p & 63)) & 1 for p in _bloom_positions_py(fp, m_bits, 4))
         for i, fp in fp_of.items()
     }
-    assert lit == arrow == twin
+    assert lit == twin
     assert all(lit[i] for i in lit if i % 3 == 0)  # every true member hits
     false_pos = [i for i in lit if lit[i] and fp_of[i] not in store_fps]
     if m_bits == 256:

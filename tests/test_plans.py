@@ -817,9 +817,9 @@ def _plan_nodes(node):
 def test_drop_pass_is_lazy_and_ships_no_text(spark, pages_parquet, tmp_path):
     """The exact-path drop pass over a parquet input runs no Spark job
     until it is executed, and none of its Exchanges outputs the page text
-    or html: the tiers shuffle only the narrow (url, part_id, flag, fp)
-    frame, even where the robots rules (a LogicalRDD without a size
-    statistic) plan a shuffle join."""
+    or html: the tiers shuffle only the narrow (url, part_id, fp) frame,
+    even where the robots rules (a LogicalRDD without a size statistic)
+    plan a shuffle join."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -844,17 +844,56 @@ def test_drop_pass_is_lazy_and_ships_no_text(spark, pages_parquet, tmp_path):
     sc = spark.sparkContext
     sc.setJobGroup("lazy-drop-pass", "lazy-drop-pass")
     try:
-        tiers, losers = _drop_labels(pages, blocked, rules, True, "exact", store, 0)
+        tiers, _, ledger = _drop_labels(pages, [0, 1], blocked, rules, True, "exact", store, 0)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert sc.statusTracker().getJobIdsForGroup("lazy-drop-pass") == []
     assert tiers == ["blocklist", "robots", "url_dedup", "exact_dedup", "store_dedup"]
 
-    assert {r._tier for r in losers.collect()} == set(tiers)
-    exchanges = [n for n in _plan_nodes(losers._jdf.queryExecution().executedPlan())
+    # the losers, and the kept pages of the run parts for the store append
+    assert {r._tier for r in ledger.collect()} == {*tiers, None}
+    exchanges = [n for n in _plan_nodes(ledger._jdf.queryExecution().executedPlan())
                  if "Exchange" in n.nodeName() and n.nodeName() != "ReusedExchange"]
     assert exchanges
     for ex in exchanges:
         cols = {a.name() for a in (ex.output().apply(i) for i in range(ex.output().size()))}
         assert not cols & {"text", "html"}, ex.toString()
+
+
+def test_no_tier_ledger_reads_only_url(spark, pages_parquet):
+    """With no tier and no fp store, the page ledger only counts pages per
+    part: its scan reads the url column alone, so counting `docs_in` never
+    makes a tier-less run scan the text or html a second time."""
+    import re
+
+    from ocr_sam_project_spark.pipeline.job import _drop_labels, with_part_id
+
+    pages = with_part_id(spark.read.parquet(pages_parquet), 4)
+    tiers, obs, ledger = _drop_labels(pages, [0, 1, 2, 3], None, None, False, None, None, 0)
+    assert tiers == [] and ledger.collect() == []
+    assert sum(obs.get.values()) == 400
+    plan = _plan(ledger)
+    assert re.findall(r"ReadSchema: struct<([^>]*)>", plan) == ["url:string"], plan
+
+
+def test_job_write_observes_stats_above_the_shuffle(spark, pages_parquet, tmp_path):
+    """The job's per-part segment, error and PII counts ride the write:
+    in the executed write plan the CollectMetrics node sits above the
+    `repartition` Exchange, in the result stage.  Below it, in a map stage,
+    a retried stage would apply its tasks' metric updates again."""
+    from ocr_sam_project_spark.pipeline.job import run_extraction_job
+
+    out = str(tmp_path / "out")
+    s = run_extraction_job(spark, pages_parquet, out, run_id="w1", num_parts=4, pii_scrub=True)
+    assert s["segments_out"] == spark.read.parquet(f"{out}/extractions").count()
+    store = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [e.physicalPlanDescription() for e in (store.apply(i) for i in range(store.size()))]
+    plan = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p
+            and f"file:{out}/extractions," in p][-1]
+    tree = plan.split("\n\n")[0].splitlines()
+    ops = [line.strip(" +-:").split(" (")[0] for line in tree]
+    assert "CollectMetrics" in ops and "Exchange" in ops, plan
+    assert ops.index("CollectMetrics") < ops.index("Exchange"), plan
+    exchange = tree[ops.index("Exchange")].rsplit("(", 1)[1].rstrip(")")
+    assert "hashpartitioning(part_id" in plan.split(f"({exchange}) Exchange")[1].split("\n\n")[0]
