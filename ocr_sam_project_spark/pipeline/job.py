@@ -174,7 +174,8 @@ def _drop_labels(
     FIRST tier that drops it (`_tier` null: kept) over a narrow frame of
     (url, part_id, fp); `fp` is the md5 of the normalized text, null for an
     empty text, which is no one's duplicate.  A tier only counts the live
-    rows, unlabelled with an fp.  minhash runs its own actions over a
+    rows, unlabelled with an fp.  A url loses on all its rows or none, as
+    the extraction drops losers by url.  minhash runs its own actions over a
     checkpoint of the frame and comes back as a url flag, as the store tier
     does (a Bloom filter of `bloom_bits` only prefilters its semi-join; a
     MISSING store means first crawl).  The rows are the losers plus, when
@@ -218,7 +219,10 @@ def _drop_labels(
         by_fp = Window.partitionBy("fp")
         keep = F.min(F.when(live, url)).over(by_fp)
         n = F.count(F.when(live, F.lit(1))).over(by_fp)
-        frame = label(frame, "exact_dedup", live & (n >= 2) & (url != keep))
+        # the one per-row verdict, spread over the url's rows (see docstring)
+        frame = frame.withColumn("_lose", live & (n >= 2) & (url != keep))
+        frame = label(frame, "exact_dedup",
+                      alive & F.max("_lose").over(Window.partitionBy("url"))).drop("_lose")
     elif dedup is not None:
         sc = pages.sparkSession.sparkContext
         sc.setJobDescription(f"tier:{dedup}_dedup")
@@ -323,9 +327,9 @@ def run_extraction_job(
     (blocklist + robots), `url_dups_dropped` and `dups_dropped` (text +
     store).  A part whose every page was dropped still completes.
     `docs_in` counts the pages that entered the extraction, so input rows =
-    `docs_in` + every tier's losers.  A url on several rows is extracted
-    once per row: the losers are keyed by url, so no tier drops one of two
-    rows that share a url and a text.
+    `docs_in` + every tier's losers.  The losers are keyed by url: a url
+    on several rows is dropped on all of them once a tier drops one, else
+    extracted once per row (no tier drops one of two identical rows).
 
     `pii_scrub` redacts emails / phone numbers / cedula IDs from the
     extracted text (regexp codegen on the output; the input is untouched)
@@ -428,16 +432,15 @@ def run_extraction_job(
         # are observed above the shuffle, in the write's result stage, so
         # each task's counts apply once even if a map stage is retried.
         wobs = Observation()
-        pii = F.col("pii_redactions") if pii_scrub else F.lit(0)
+        err = F.col("error").isNotNull()
+        counts = [F.count_if((part == p) & c).alias(f"{k}:{p}")
+                  for p in run_parts for k, c in (("segments_out", F.lit(True)), ("errors", err))]
+        if pii_scrub:  # else every page's pii_redactions is 0, and not observed
+            counts += [F.coalesce(F.sum(F.when(part == p, F.col("pii_redactions"))), F.lit(0))
+                       .alias(f"pii_redactions:{p}") for p in run_parts]
         (
             extracted.repartition(num_parts, part)
-            .observe(wobs, *[
-                agg.alias(f"{name}:{p}") for p in run_parts for name, agg in [
-                    ("segments_out", F.count_if(part == p)),
-                    ("errors", F.count_if((part == p) & F.col("error").isNotNull())),
-                    ("pii_redactions", F.coalesce(F.sum(F.when(part == p, pii)), F.lit(0))),
-                ]
-            ])
+            .observe(wobs, *counts)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("part_id")
@@ -450,7 +453,7 @@ def run_extraction_job(
 
         w = wobs.get
         for p, row in per_part.items():
-            row.update({k: w[f"{k}:{p}"] for k in ("segments_out", "errors", "pii_redactions")})
+            row.update({k: w.get(f"{k}:{p}", 0) for k in _STATS[1:]})  # _STATS[0]: docs_in
         summary.update({k: sum(v[k] for v in per_part.values()) for k in _STATS},
                        **counters, elapsed_sec=elapsed)
         _append_rows(spark, [

@@ -886,25 +886,43 @@ def test_job_tier_counts_respect_only_parts_and_resume(spark, pages_parquet, tmp
 def test_job_fp_store_append_equals_corpus_fingerprints(spark, pages_parquet, tmp_path):
     """The rows a run appends to the fp store are `corpus_fingerprints` of
     the non-empty pages it extracted, for an all-tiers run over a seeded
-    store and for a first crawl whose store does not exist yet; the job
-    takes them from its page ledger instead of fingerprinting again."""
+    store, for a first crawl whose store does not exist yet, and for a url
+    on two rows of which one is an exact duplicate; `docs_in` counts those
+    same extracted pages.  The job takes the fingerprints from its page
+    ledger instead of fingerprinting again."""
     import os
     from collections import Counter
 
     from ocr_sam_project_spark.operators.dedup import corpus_fingerprints
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     in_dir, opts = _all_tiers_input(spark, pages_parquet, tmp_path)
     first = {"num_parts": 8, "dedup": "exact", "fp_store_path": str(tmp_path / "new_store")}
+    # a url on two rows, one of them an exact duplicate of a smaller url's
+    # page: the url loses on both rows, so neither is extracted or stored
+    base = pq.read_table(pages_parquet)
+    pages = sorted((r for r in base.to_pylist() if (r["text"] or "").strip()),
+                   key=lambda r: r["url"])
+    shadow_dir = tmp_path / "shadow_in"
+    shadow_dir.mkdir()
+    pq.write_table(pa.Table.from_pylist(pages + [dict(pages[0], url=pages[-1]["url"])],
+                                        schema=base.schema), str(shadow_dir / "p.parquet"))
+    shadow = {"num_parts": 8, "dedup": "exact", "fp_store_path": str(tmp_path / "shadow_store")}
     rows = lambda df: Counter((r.url, r.fp) for r in df.select("url", "fp").collect())  # noqa: E731
-    for run, o in (("all", opts), ("first", first)):
+    for run, src, o in (("all", in_dir, opts), ("first", in_dir, first),
+                        ("shadow", str(shadow_dir), shadow)):
         store = o["fp_store_path"]
         before = rows(spark.read.parquet(store)) if os.path.exists(store) else Counter()
         out = str(tmp_path / run)
-        run_extraction_job(spark, in_dir, out, run_id=run, **o)
-        todo = spark.read.parquet(in_dir).join(
+        s = run_extraction_job(spark, src, out, run_id=run, **o)
+        todo = spark.read.parquet(src).join(
             spark.read.parquet(f"{out}/extractions").select("url"), "url", "left_semi")
         want = rows(corpus_fingerprints(todo.filter(F.length(F.trim("text")) > 0), "text", "url"))
         assert want and rows(spark.read.parquet(store)) == before + want, run
+        assert s["docs_in"] == todo.count(), run
+    assert pages[-1]["url"] not in {u for u, _ in want}
 
 
 @pytest.fixture(scope="module")
@@ -941,12 +959,12 @@ def test_job_tier_metrics_rows_equal_summary(spark, all_tiers_run):
 
 def test_job_issues_no_per_tier_count_job(all_tiers_run):
     """Every tier's per-part counts ride the one drop-pass checkpoint job,
-    and the write observes its own stats.  The run issues 23-25 jobs (max
-    over 8 runs); the bound is that plus 2.  An action per tier (the tier loop
-    the pass replaced issued 37-38), a separate count job per tier, or a
-    stats read-back of the written table (28 jobs with one) pushes it past."""
+    and the write observes its own stats.  The run issues 25-27 jobs (max
+    over 8 runs; the exact tier's per-url window adds 2); the bound is that
+    plus 2.  An action per tier (the tier loop the pass replaced issued
+    37-38) or a separate count job per tier pushes it past."""
     _, _, jobs = all_tiers_run
-    assert jobs <= 25 + 2
+    assert jobs <= 27 + 2
 
 
 def test_job_minhash_tier_matches_dedup_losers(spark, pages_parquet, tmp_path):
