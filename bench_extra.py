@@ -13,7 +13,8 @@ Usage:
   python bench_extra.py plancount [<query> ...] # Exchange/BatchEvalPython counts
                                                 # (every registered query if none)
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS (32).
+Env: SPARK_GRAFT_SF_DIR (default: SF_DIR below), SPARK_GRAFT_CPUS (default:
+the cores this process may run on).
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ if HERE not in sys.path:
     sys.path.insert(0, HERE)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def _spark():

@@ -14,7 +14,7 @@ analogs the north_star asks for (training-data pipeline over Common-Crawl
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .textstats import normalize_for_fingerprint
@@ -184,35 +184,36 @@ PII_PHONE_RE = r"\+\d{3} \d{3}-\d{4}"
 PII_CEDULA_RE = r"\d{1,2}-\d{3,4}-\d{3,4}"
 
 
+def pii_redaction(t: Column) -> tuple[Column, Column, Column, Column]:
+    """The email -> phone -> id redaction of the text column `t`: (the
+    redacted text, n_emails, n_phones, n_ids).  Emails and phones are
+    counted BEFORE redaction, ids AFTER the phone redaction (a phone's
+    trailing digits would otherwise double-count as an id fragment); the
+    fixed order is the DuckDB twin's too."""
+    after_phone = F.regexp_replace(
+        F.regexp_replace(t, PII_EMAIL_RE, "<EMAIL>"), PII_PHONE_RE, "<PHONE>"
+    )
+    return (
+        F.regexp_replace(after_phone, PII_CEDULA_RE, "<ID>"),
+        F.regexp_count(t, F.lit(PII_EMAIL_RE)).cast("long"),
+        F.regexp_count(t, F.lit(PII_PHONE_RE)).cast("long"),
+        F.regexp_count(after_phone, F.lit(PII_CEDULA_RE)).cast("long"),
+    )
+
+
 def pii_scrub(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Redact emails, phone numbers, and cedula-style national IDs,
-    returning (id, text, n_emails, n_phones, n_ids).  Counts are taken
-    BEFORE redaction; replacement order (email -> phone -> id) is fixed so
-    the twin engines transform identically.
+    returning (id, text, n_emails, n_phones, n_ids) (see `pii_redaction`).
 
     Scale shape: pure regexp_count/regexp_replace codegen — narrow,
     shuffle-free, pipeline-able straight into the curation funnel."""
-    t = F.col(text_col)
-    out = df.select(
-        F.col(id_col),
-        t.alias("_t0"),
-        F.regexp_count(t, F.lit(PII_EMAIL_RE)).cast("long").alias("n_emails"),
-        F.regexp_count(t, F.lit(PII_PHONE_RE)).cast("long").alias("n_phones"),
+    text, n_emails, n_phones, n_ids = pii_redaction(F.col(text_col))
+    return df.select(
+        F.col(id_col), text.alias("text"), n_emails.alias("n_emails"),
+        n_phones.alias("n_phones"), n_ids.alias("n_ids"),
     )
-    scrubbed1 = F.regexp_replace(F.col("_t0"), PII_EMAIL_RE, "<EMAIL>")
-    scrubbed2 = F.regexp_replace(scrubbed1, PII_PHONE_RE, "<PHONE>")
-    # ids counted AFTER phone redaction: a phone's trailing digits would
-    # otherwise double-count as an id fragment — same order in the oracle
-    out = out.withColumn("_t2", scrubbed2).select(
-        id_col,
-        F.regexp_replace(F.col("_t2"), PII_CEDULA_RE, "<ID>").alias("text"),
-        "n_emails",
-        "n_phones",
-        F.regexp_count(F.col("_t2"), F.lit(PII_CEDULA_RE)).cast("long").alias("n_ids"),
-    )
-    return out
 
 
 # --------------------------------------------------------------------------

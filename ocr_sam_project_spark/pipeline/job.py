@@ -189,7 +189,7 @@ def _drop_labels(
     from ..operators.webgraph import blocklist_hits, robots_filter
 
     text, url = F.col("text"), F.col("url")
-    frame = pages.select(
+    frame = selected = pages.select(
         "url", "part_id",
         F.when(F.length(F.trim(text)) > 0, F.md5(normalize_for_fingerprint(text))).alias("fp"),
         *([text] if dedup not in (None, "exact") else []),
@@ -236,7 +236,10 @@ def _drop_labels(
     if store_path is not None and _path_exists(pages.sparkSession, store_path):
         # the store's schema is known, so no schema-inference job runs
         store = pages.sparkSession.read.schema("fp string").parquet(store_path)
-        fresh = frame.filter(live)
+        # every tier above judges whole urls, so all rows of a url still
+        # alive here are live, and probing the frame as first selected gives
+        # the same labels without running the tier chain a second time
+        fresh = selected.filter(F.col("fp").isNotNull())
         if bloom_bits:
             fresh = fresh.filter(bloom_hit(F.col("fp"), bloom_build(store, m_bits=bloom_bits, k=4),
                                            bloom_bits, 4))
@@ -274,11 +277,13 @@ def _session_restored(spark: SparkSession):
 
 
 def _append_rows(spark: SparkSession, rows: list[dict], schema: StructType, path: str) -> None:
-    """Append driver-side rows to a parquet table.  An Arrow table becomes
-    a LocalRelation, so no Python-worker task runs (a list of tuples ships
-    pickled rows through a Python RDD)."""
+    """Append driver-side rows to a parquet table as one file.  An Arrow
+    table becomes a LocalRelation, so no Python-worker task runs (a list of
+    tuples ships pickled rows through a Python RDD); left as it is, the
+    relation is sliced across the cores and writes a file per slice, which
+    every resume's `completed_parts` reads back."""
     table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
-    spark.createDataFrame(table, schema=schema).write.mode("append").parquet(path)
+    spark.createDataFrame(table, schema=schema).coalesce(1).write.mode("append").parquet(path)
 
 
 def run_extraction_job(
@@ -405,32 +410,23 @@ def run_extraction_job(
         # already-small output; a per-row column carries the counts into the
         # written table and the write's stats) ------------------------------
         if pii_scrub:
-            from ..operators.curation import PII_CEDULA_RE, PII_EMAIL_RE, PII_PHONE_RE
+            from ..operators.curation import pii_redaction
 
             t = F.col("extracted_text")
-            after_phone = F.regexp_replace(
-                F.regexp_replace(t, PII_EMAIL_RE, "<EMAIL>"), PII_PHONE_RE, "<PHONE>"
-            )
-            # ids counted AFTER phone redaction (a phone's digit tail would
-            # double-count as an id fragment) — same order as operators.pii_scrub
-            n_red = (
-                F.regexp_count(t, F.lit(PII_EMAIL_RE))
-                + F.regexp_count(t, F.lit(PII_PHONE_RE))
-                + F.regexp_count(after_phone, F.lit(PII_CEDULA_RE))
-            )
+            redacted, n_emails, n_phones, n_ids = pii_redaction(t)
             extracted = extracted.withColumn(
-                "pii_redactions", F.when(t.isNull(), F.lit(0)).otherwise(n_red).cast("long")
-            ).withColumn(
-                "extracted_text",
-                F.when(t.isNull(), t).otherwise(F.regexp_replace(after_phone, PII_CEDULA_RE, "<ID>")),
-            )
+                "pii_redactions",
+                F.when(t.isNull(), F.lit(0)).otherwise(n_emails + n_phones + n_ids).cast("long"),
+            ).withColumn("extracted_text", F.when(t.isNull(), t).otherwise(redacted))
 
         # One explicit shuffle of the EXTRACTED rows (far smaller than the
         # input html) clusters each lineage partition into a single output
         # file; without it every map task writes a file into every partition
-        # dir (measured 44s write vs 7s at bench scale).  The per-part stats
-        # are observed above the shuffle, in the write's result stage, so
-        # each task's counts apply once even if a map stage is retried.
+        # dir (measured 44s write vs 7s at bench scale).  Write task p holds
+        # part p: hash-partitioned part ids collide (at 4 parts two of the
+        # four tasks got every row, at 32 only 18 got any).  The per-part
+        # stats are observed above the shuffle, in the write's result stage,
+        # so each task's counts apply once even if a map stage is retried.
         wobs = Observation()
         err = F.col("error").isNotNull()
         counts = [F.count_if((part == p) & c).alias(f"{k}:{p}")
@@ -439,7 +435,7 @@ def run_extraction_job(
             counts += [F.coalesce(F.sum(F.when(part == p, F.col("pii_redactions"))), F.lit(0))
                        .alias(f"pii_redactions:{p}") for p in run_parts]
         (
-            extracted.repartition(num_parts, part)
+            extracted.repartitionById(num_parts, part)
             .observe(wobs, *counts)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

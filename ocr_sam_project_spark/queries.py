@@ -44,28 +44,36 @@ import weakref
 
 _LOADED: "weakref.WeakKeyDictionary[SparkSession, str]" = weakref.WeakKeyDictionary()
 
+# the tables whose queries run regex/Python-heavy narrow stages: each also
+# gets a `<table>_spread` view, laid out by read_spread's rule
+SPREAD_TABLES = ("documents", "embeddings")
+
 
 def _load(spark: SparkSession, sf_dir: str) -> None:
+    """Register every table of `sf_dir` as a view, once per session: the
+    one place that knows where a table lives and how it is scanned.
+
+    The bare view `t` is a plain scan.  Spreading the big tables regressed
+    nearly every SQL query (r6 A/B: a2 0.22s -> 0.74s, w1 0.30s -> 0.71s,
+    q3 0.76s -> 1.20s at sf0.1): their per-row expressions are cheap and
+    the aggregates already do map-side partials, so the exchange costs more
+    than the single-task scan it parallelizes.  A driver probe (a first()
+    row, a centroid sample) and a small broadcast side input read the bare
+    view too (see read_spread).  `t_spread` is for the streamed side of a
+    regex/Python-heavy query."""
     if _LOADED.get(spark) == sf_dir:
         return
-    # Views are registered over BARE scans (r6 A/B): spreading the big
-    # tables regressed nearly every SQL query (a2 0.22s -> 0.74s, w1 0.30s ->
-    # 0.71s, q3 0.76s -> 1.20s at sf0.1) — their per-row expressions are
-    # cheap and the aggregates already do map-side partials, so the exchange
-    # costs more than the single-task scan it parallelizes.  Only the
-    # regex/Python-heavy queries read through read_spread.
     for t in TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
+    for t in SPREAD_TABLES:
+        read_spread(spark, f"{sf_dir}/{t}.parquet").createOrReplaceTempView(f"{t}_spread")
     _LOADED[spark] = sf_dir
 
 
-def _bare(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """`table`'s registered bare scan, for a driver probe or a small side
-    input beside a read_spread frame (see read_spread).  The view reuses
-    the file listing and footer read that each spark.read.parquet repeats
-    (~0.1 s per read of a one-file sf0.1 table, local[4] on 4 vCPUs)."""
+def _table(spark: SparkSession, sf_dir: str, view: str) -> DataFrame:
+    """The view `_load` registered for `sf_dir` under the name `view`."""
     _load(spark, sf_dir)
-    return spark.table(table)
+    return spark.table(view)
 
 
 def _sql(name: str, spark_sql: str, duck_sql: str | None) -> None:
@@ -917,7 +925,7 @@ def _asof_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-or-before it (point-in-time correctness — the feature-store shape)."""
     from .operators.asof import asof_join
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
@@ -1028,7 +1036,7 @@ def _t_token_duck() -> str:
 def _t_token_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.textstats import bpe_ish_token_count, token_count
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = _table(spark, sf_dir, "documents")
     return df.select(
         "doc_id",
         token_count(F.col("text")).alias("n_tokens"),
@@ -1045,7 +1053,7 @@ def _t_repetition_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate-token fraction and adjacent-repeat fraction per document."""
     from .operators.textstats import repetition_stats
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    df = _table(spark, sf_dir, "documents").select("doc_id", "text")
     return repetition_stats(df).select(
         "doc_id", "n_tokens", "dup_token_frac", "adjacent_repeat_frac"
     )
@@ -1087,7 +1095,7 @@ ORACLES["t_repetition"] = _t_repetition_duck()
 def _t_lang_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.textstats import lang_id
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = _table(spark, sf_dir, "documents")
     return (
         df.select("lang", lang_id(F.col("text")).alias("lang_guess"))
         .groupBy("lang", "lang_guess")
@@ -1125,7 +1133,7 @@ ORACLES["t_lang_id"] = _t_lang_duck()
 def _t_quality_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.textstats import quality_score
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = _table(spark, sf_dir, "documents")
     return df.select("doc_id", quality_score(F.col("text")).alias("quality"))
 
 
@@ -1200,7 +1208,7 @@ def _t_curate_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-language doc/token rollup.  avg_quality accumulates via
     DECIMAL(18,6) so the cross-engine sum is order-independent (float +=
     is not associative across partitions)."""
-    return _curate_funnel(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return _curate_funnel(_table(spark, sf_dir, "documents"))
 
 
 def _curate_survivor_ctes(src_ctes: str = "", src: str = "documents") -> str:
@@ -1261,7 +1269,7 @@ def _t_winnow_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic quarter of the corpus: the md5-portable rolling hash is
     # ~300 interpreted HOF evaluations per doc, and this query exists to
     # evidence VALUE parity, not throughput (production swaps xxhash64).
-    df = read_spread(spark, f"{sf_dir}/documents.parquet").filter(F.col("doc_id") % 4 == 0)
+    df = _table(spark, sf_dir, "documents_spread").filter(F.col("doc_id") % 4 == 0)
     out = with_winnow_fingerprints(df, "text", k=8, w=4)
     return out.select("doc_id", F.explode("winnow_fps").alias("fp"))
 
@@ -1290,7 +1298,7 @@ ORACLES["t_winnow_fingerprint"] = _t_winnow_duck()
 def _d_exact_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import exact_dedup
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = _table(spark, sf_dir, "documents")
     return exact_dedup(df)
 
 
@@ -1304,7 +1312,7 @@ QUERY_FNS["d_exact_dedup"] = _d_exact_fn
 def _d_minhash_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import minhash_signatures
 
-    df = read_spread(spark, f"{sf_dir}/documents.parquet")
+    df = _table(spark, sf_dir, "documents_spread")
     sig = minhash_signatures(df, k=4)
     return sig.select(
         F.col("id").alias("doc_id"),
@@ -1342,7 +1350,7 @@ ORACLES["d_minhash_sig"] = _d_minhash_duck()
 def _d_jaccard_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import ngram_jaccard_pairs
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = _table(spark, sf_dir, "documents")
     return ngram_jaccard_pairs(df, threshold=0.8).withColumnRenamed("id_a", "doc_a").withColumnRenamed("id_b", "doc_b")
 
 
@@ -1362,7 +1370,7 @@ QUERY_FNS["d_ngram_jaccard"] = _d_jaccard_fn
 def _d_simhash_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import with_simhash
 
-    df = read_spread(spark, f"{sf_dir}/documents.parquet")
+    df = _table(spark, sf_dir, "documents_spread")
     return with_simhash(df, "text", bits=16).select("doc_id", "sh")
 
 
@@ -1388,7 +1396,7 @@ ORACLES["d_simhash"] = _d_simhash_duck()
 def _s_topk_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import cosine
 
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    df = _table(spark, sf_dir, "embeddings")
     q = df.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     scored = df.crossJoin(F.broadcast(q)).select(
         "vec_id", F.round(cosine(F.col("embedding"), F.col("qv")), 4).alias("sim")
@@ -1433,7 +1441,7 @@ def _s_quantize_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-exact (double math, fixed rounding)."""
     from .operators.similarity import quantize_embeddings
 
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    df = _table(spark, sf_dir, "embeddings")
     return quantize_embeddings(df)
 
 
@@ -1448,7 +1456,7 @@ def _s_topk_quant_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     error; the oracle is exact because DuckDB quantizes identically."""
     from .operators.similarity import cosine, quantize_embeddings
 
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    df = _table(spark, sf_dir, "embeddings")
     quant = quantize_embeddings(df)
     q = quant.filter(F.col("vec_id") == 0).select(F.col("qemb").alias("qv"))
     dbl = lambda c: F.transform(c, lambda x: x.cast("double"))  # noqa: E731
@@ -1481,15 +1489,14 @@ def _s_neardup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import dot, norm
 
     # norms once per ROW, not per pair (O(n) instead of O(n^2) norm work);
-    # the broadcast side reads the bare scan, so only the streamed side
+    # the broadcast side reads the bare view, so only the streamed side
     # pays the round-robin Exchange
-    a = read_spread(spark, f"{sf_dir}/embeddings.parquet").select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"),
-        norm(F.col("embedding")).alias("na"),
-    )
-    b = _bare(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"),
-        norm(F.col("embedding")).alias("nb"),
+    a, b = (
+        _table(spark, sf_dir, view).select(
+            F.col("vec_id").alias(f"id_{s}"), F.col("embedding").alias(f"v{s}"),
+            norm(F.col("embedding")).alias(f"n{s}"),
+        )
+        for view, s in (("embeddings_spread", "a"), ("embeddings", "b"))
     )
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
@@ -1552,7 +1559,7 @@ def _s_rhp_near_dup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     all have to agree with the DuckDB twin for the hash to match."""
     from .operators.similarity import near_dup_cosine
 
-    df = read_spread(spark, f"{sf_dir}/embeddings.parquet")
+    df = _table(spark, sf_dir, "embeddings_spread")
     return near_dup_cosine(
         df, tau=_RHP_ND_TAU, n_planes=_RHP_ND_PLANES, max_bucket=_RHP_ND_CAP
     )
@@ -1610,7 +1617,7 @@ _CP_NEG_LO, _CP_NEG_HI, _CP_CELLS, _CP_CLUSTER_CAP = 0.1, 0.3, 8, 64
 def _s_contrastive_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import contrastive_pairs
 
-    df = read_spread(spark, f"{sf_dir}/embeddings.parquet")
+    df = _table(spark, sf_dir, "embeddings_spread")
     return contrastive_pairs(
         df,
         tau_pos=_RHP_ND_TAU,
@@ -1690,7 +1697,7 @@ def _m_media_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector flattened to scalar columns (canonicalizer-safe)."""
     from .operators.multimodal import media_features
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     media = docs.select("doc_id", F.col("text").cast("binary").alias("blob"))
     feats = media_features(media, "doc_id", "blob", fake=True)
     return feats.select(
@@ -1719,7 +1726,7 @@ ORACLES["m_media_features"] = _m_media_duck()
 def _m_frames_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import frame_sample_plan
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     vids = docs.select("doc_id", (F.col("doc_id") % 300).cast("int").alias("n_frames"))
     return frame_sample_plan(vids, "doc_id", "n_frames", every_k=30)
 
@@ -1742,7 +1749,7 @@ def _x8_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .pipeline.schema import RAW_EXTRACTION_SCHEMA
     from .pipeline.stages import enrich_stage
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     i = F.col("doc_id")
 
     def persona(seq: int, monto_expr):
@@ -1847,7 +1854,7 @@ def _docs_as_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> pages shape with the deterministic pseudo-oficio header
     grafted on (same enrichment as __spark_entry__.entry), so the full
     extractor chain has real structure to find."""
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     return docs.select(
         F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
         F.lit(None).cast("binary").alias("html"),
@@ -2054,7 +2061,7 @@ def _d_lsh_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     no exact SQL twin; d_minhash_lsh_portable carries the per-step oracle."""
     from .operators.dedup import minhash_near_dups
 
-    df = read_spread(spark, f"{sf_dir}/documents.parquet")
+    df = _table(spark, sf_dir, "documents_spread")
     return minhash_near_dups(df, threshold=0.5)
 
 
@@ -2069,7 +2076,7 @@ def _d_lsh_portable_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagship dedup scale path from rows-only to hash-verified."""
     from .operators.dedup import minhash_near_dups
 
-    df = read_spread(spark, f"{sf_dir}/documents.parquet")
+    df = _table(spark, sf_dir, "documents_spread")
     return minhash_near_dups(df, threshold=0.5, k=8, bands=4, fast=False)
 
 
@@ -2117,7 +2124,7 @@ def _d_lsh_clusters_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     computing the transitive closure over the SAME pair set."""
     from .operators.dedup import minhash_near_dups, resolve_clusters
 
-    df = read_spread(spark, f"{sf_dir}/documents.parquet")
+    df = _table(spark, sf_dir, "documents_spread")
     pairs = minhash_near_dups(df, threshold=0.5, k=8, bands=4, fast=False)
     return resolve_clusters(pairs)
 
@@ -2146,7 +2153,7 @@ def _d_lsh_clusters_fast_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     above carries the oracle.  This is the variant bench.py times."""
     from .operators.dedup import minhash_near_dups, resolve_clusters
 
-    df = read_spread(spark, f"{sf_dir}/documents.parquet")
+    df = _table(spark, sf_dir, "documents_spread")
     return resolve_clusters(minhash_near_dups(df, threshold=0.5, fast=True))
 
 
@@ -2156,7 +2163,7 @@ QUERY_FNS["d_lsh_clusters_fast"] = _d_lsh_clusters_fast_fn
 def _d_simhash_nd_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import simhash_near_dups
 
-    df = read_spread(spark, f"{sf_dir}/documents.parquet")
+    df = _table(spark, sf_dir, "documents_spread")
     out = simhash_near_dups(df, bits=16, max_hamming=2)
     return out.withColumn("hamming", F.col("hamming").cast("long"))
 
@@ -2195,7 +2202,7 @@ def _d_simhash_clusters_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-source-agnostic)."""
     from .operators.dedup import resolve_clusters, simhash_near_dups
 
-    df = read_spread(spark, f"{sf_dir}/documents.parquet")
+    df = _table(spark, sf_dir, "documents_spread")
     return resolve_clusters(simhash_near_dups(df, bits=16, max_hamming=2))
 
 
@@ -2219,11 +2226,11 @@ ORACLES["d_simhash_clusters"] = _d_simhash_clusters_duck()
 def _s_lsh_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import topk_cosine_lsh
 
-    # the driver probe reads the bare scan: over the spread frame, first()
+    # the driver probe reads the bare view: over the spread frame, first()
     # would run the whole round-robin shuffle to fetch one row
-    probe = _bare(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
+    probe = _table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
     qv = probe.select("embedding").first().embedding
-    df = read_spread(spark, f"{sf_dir}/embeddings.parquet")
+    df = _table(spark, sf_dir, "embeddings_spread")
     return topk_cosine_lsh(df, [float(x) for x in qv], k=10)
 
 
@@ -2266,9 +2273,9 @@ ORACLES["s_topk_cosine_lsh"] = _s_lsh_duck()
 def _s_ivf_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import ivf_assign, ivf_centroids
 
-    # centroid sample from the bare scan (see _s_lsh_fn)
-    cents = ivf_centroids(_bare(spark, sf_dir, "embeddings"), 8)
-    df = read_spread(spark, f"{sf_dir}/embeddings.parquet")
+    # centroid sample from the bare view (see _s_lsh_fn)
+    cents = ivf_centroids(_table(spark, sf_dir, "embeddings"), 8)
+    df = _table(spark, sf_dir, "embeddings_spread")
     return (
         ivf_assign(df, n_centroids=8, centroids=cents)
         .groupBy("centroid_id").count().withColumnRenamed("count", "n")
@@ -2306,10 +2313,10 @@ def _s_ivf_search_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-breaks) -> exact DuckDB twin."""
     from .operators.similarity import ivf_centroids, ivf_search
 
-    # query vector and centroid sample from the bare scan (see _s_lsh_fn)
-    bare = _bare(spark, sf_dir, "embeddings")
+    # query vector and centroid sample from the bare view (see _s_lsh_fn)
+    bare = _table(spark, sf_dir, "embeddings")
     qv = [float(x) for x in bare.filter(F.col("vec_id") == 0).first().embedding]
-    df = read_spread(spark, f"{sf_dir}/embeddings.parquet")
+    df = _table(spark, sf_dir, "embeddings_spread")
     return ivf_search(
         df, qv, k=10, nprobe=2, n_centroids=8, centroids=ivf_centroids(bare, 8)
     )
@@ -2351,12 +2358,12 @@ def _s_topk_batch_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     score -> one query_id-shuffle window top-k)."""
     from .operators.similarity import topk_cosine_batch
 
-    # the broadcast query set reads the bare scan: spreading it would add a
+    # the broadcast query set reads the bare view: spreading it would add a
     # second round-robin Exchange for 1% of the rows
-    qs = _bare(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 100 == 0).select(
+    qs = _table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    df = read_spread(spark, f"{sf_dir}/embeddings.parquet")
+    df = _table(spark, sf_dir, "embeddings_spread")
     return topk_cosine_batch(df, qs, k=5)
 
 
@@ -2388,7 +2395,7 @@ def _d_store_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists in the store, keeping min-id within the new batch."""
     from .operators.dedup import corpus_fingerprints, dedup_against_store
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     prior = docs.filter(F.col("doc_id") % 3 == 0)
     store = corpus_fingerprints(prior, id_col="doc_id").select("fp")
     recrawl = prior.filter(F.col("doc_id") % 9 == 0).withColumn(
@@ -2435,7 +2442,7 @@ _BLOOM_M_SMALL, _BLOOM_M, _BLOOM_K = 1024, 65536, 4
 def _bloom_scenario(spark: SparkSession, sf_dir: str):
     from .operators.dedup import corpus_fingerprints
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     prior = docs.filter(F.col("doc_id") % 3 == 0)
     store = corpus_fingerprints(prior, id_col="doc_id").select("fp")
     recrawl = prior.filter(F.col("doc_id") % 9 == 0).withColumn(
@@ -2517,7 +2524,7 @@ def _t_line_dedup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     first (doc_id, pos) occurrence corpus-wide."""
     from .operators.curation import line_dedup
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     tk = F.split(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " ")
     n_lines = F.ceil(F.size(tk) / F.lit(_CHUNK)).cast("int")
     chunked = docs.select(
@@ -2582,7 +2589,7 @@ def _t_span_dedup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     later positions; docs rebuilt from surviving canonical tokens."""
     from .operators.curation import span_dedup
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     return span_dedup(docs, n=_SPAN_N)
 
 
@@ -2640,9 +2647,9 @@ def _t_decontaminate_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped.  Returns the surviving corpus ids."""
     from .operators.curation import decontaminate
 
-    # the 1/97 probe set reads the bare scan (see _s_topk_batch_fn)
-    probe = _bare(spark, sf_dir, "documents").filter(F.col("doc_id") % 97 == 0)
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    # the 1/97 probe set reads the bare view (see _s_topk_batch_fn)
+    probe = _table(spark, sf_dir, "documents").filter(F.col("doc_id") % 97 == 0)
+    docs = _table(spark, sf_dir, "documents_spread")
     corpus = docs.filter(F.col("doc_id") % 97 != 0)
     return decontaminate(corpus, probe, n=5).select("doc_id")
 
@@ -2671,10 +2678,10 @@ def _t_domain_cap_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample; under-cap domains bypass the window sort entirely."""
     from .operators.curation import domain_cap
 
-    # bare scan (r6 A/B): the per-row work is trivial (an md5 only on the
+    # bare view (r6 A/B): the per-row work is trivial (an md5 only on the
     # over-cap slice), so spreading measured 2x SLOWER than the single-task
     # scan at sf0.1 (0.43s -> 0.88s)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return domain_cap(docs, cap=20).select("doc_id", "source")
 
 
@@ -2698,7 +2705,7 @@ def _t_pii_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     then redact and count."""
     from .operators.curation import pii_scrub
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     d = F.col("doc_id")
     with_pii = docs.select(
         "doc_id",
@@ -2753,7 +2760,7 @@ def _d_url_dedup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     fragment) that must collapse to ONE canonical url with keep-min-id."""
     from .operators.curation import url_dedup
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     g = F.floor(d / 3).cast("bigint")
     host = F.concat(F.lit("example"), (g % 20).cast("string"), F.lit(".com"))
@@ -2817,7 +2824,7 @@ ORACLES["d_url_dedup"] = _d_url_dedup_duck()
 def _t_tfidf_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import tfidf_topk
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     # corpus size from the parquet FOOTER (metadata read, not a scan) — the
     # bench/driver analog of "ingest already knows n"; the operator then
     # scans the corpus exactly once (plan-tested)
@@ -2857,7 +2864,7 @@ def _t_mixture_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-all weights — via the frozen md5-threshold coin."""
     from .operators.curation import mixture_sample
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     weights = {f"src{i}": (i % 5) * 0.25 for i in range(20)}
     return mixture_sample(docs, weights).select("doc_id", "source")
 
@@ -2880,7 +2887,7 @@ ORACLES["t_mixture_sample"] = _t_mixture_duck()
 def _t_pack_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import pack_sequences
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     return pack_sequences(docs, seq_len=512, num_parts=8)
 
 
@@ -2912,7 +2919,7 @@ ORACLES["t_pack_sequences"] = _t_pack_duck()
 def _t_pack_assign_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import pack_assignments
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     return pack_assignments(docs, seq_len=512, num_parts=8)
 
 
@@ -2955,7 +2962,7 @@ def _t_boilerplate_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     organic 2-doc chunk repeats stay, proving the threshold bites)."""
     from .operators.curation import boilerplate_strip
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     tk = F.split(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " ")
     n_lines = F.ceil(F.size(tk) / F.lit(_CHUNK)).cast("int")
     chunked = docs.select(
@@ -3023,10 +3030,10 @@ ORACLES["t_boilerplate_strip"] = _t_boilerplate_duck()
 def _t_unigram_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import unigram_logprob
 
-    # bare scan (r6 A/B): the token explode is cheap, and spreading measured
+    # bare view (r6 A/B): the token explode is cheap, and spreading measured
     # a slight net loss (medians 4.4s vs 3.7s under load; 1.58s vs 1.18s in
     # the clean full-bench window)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return unigram_logprob(docs)
 
 
@@ -3071,7 +3078,7 @@ _TOKEN_BUDGET = 1300  # splits sf0.01's 20 domains ~6 under / ~14 over, so the
 def _t_token_budget_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import token_budget_select
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     return token_budget_select(docs, budget=_TOKEN_BUDGET)
 
 
@@ -3107,7 +3114,7 @@ def _t_intra_doc_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-doc chunk repeats dedup too."""
     from .operators.curation import intra_doc_dedup
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     tk = F.split(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " ")
     n_lines = F.ceil(F.size(tk) / F.lit(_CHUNK)).cast("int")
     lines_arr = F.transform(
@@ -3172,7 +3179,7 @@ _DSIR_TARGET_LANG = "es"  # minority slice (73/500 docs at sf0.01) as target
 def _t_dsir_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import dsir_weights
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     return dsir_weights(docs, docs.filter(F.col("lang") == _DSIR_TARGET_LANG))
 
 
@@ -3223,7 +3230,7 @@ def _d_quality_canon_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-quality member (id tiebreak) instead of the smallest id."""
     from .operators.dedup import minhash_near_dups, quality_canonical
 
-    df = read_spread(spark, f"{sf_dir}/documents.parquet")
+    df = _table(spark, sf_dir, "documents_spread")
     pairs = minhash_near_dups(df, threshold=0.5, k=8, bands=4, fast=False)
     return quality_canonical(df, pairs)
 
@@ -3262,7 +3269,7 @@ def _t_gopher_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules provably fire; the rest run on raw text."""
     from .operators.textstats import gopher_rules
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     decorated = docs.select(
         "doc_id",
         F.when(
@@ -3337,7 +3344,7 @@ _DUP_NGRAM_N = 5
 def _t_dup_ngram_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import dup_ngram_frac
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     return dup_ngram_frac(docs, n=_DUP_NGRAM_N)
 
 
@@ -3391,15 +3398,15 @@ def _s_semantic_dedup_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the guarded production path, not just the unguarded one."""
     from .operators.similarity import ivf_centroids, semantic_dedup
 
-    df = read_spread(spark, f"{sf_dir}/embeddings.parquet")
+    df = _table(spark, sf_dir, "embeddings_spread")
     # tau pinned BELOW the synthetic corpus's max pairwise cosine (~0.51)
     # so the driver hash actually rides on the pair graph + guard keys +
     # component resolution (at tau=0.9 nothing qualifies and the check
     # degenerates to an identity scan); production tau stays caller-chosen.
-    # The centroid sample reads the bare scan (see _s_lsh_fn).
+    # The centroid sample reads the bare view (see _s_lsh_fn).
     return semantic_dedup(
         df, tau=0.35, n_centroids=8,
-        centroids=ivf_centroids(_bare(spark, sf_dir, "embeddings"), 8),
+        centroids=ivf_centroids(_table(spark, sf_dir, "embeddings"), 8),
         max_cluster=_SEMDEDUP_CAP, sub_planes=_SEMDEDUP_SUB_PLANES,
     ).select("vec_id")
 
@@ -3471,7 +3478,7 @@ ORACLES["s_semantic_dedup"] = _s_semantic_dedup_duck(tau=0.35)
 def _t_bigram_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import bigram_logprob
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     return bigram_logprob(docs)
 
 
@@ -3521,7 +3528,7 @@ def _t_stratified_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import mixture_sample
     from .operators.textstats import quality_score
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     q = quality_score(F.col("text"))
     bucketed = docs.withColumn(
         "stratum",
@@ -3567,7 +3574,7 @@ _KM_K, _KM_ITERS, _KM_DIM = 4, 2, 64
 def _s_kmeans_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import kmeans_fit
 
-    df = read_spread(spark, f"{sf_dir}/embeddings.parquet")
+    df = _table(spark, sf_dir, "embeddings_spread")
     assigned, _cent = kmeans_fit(df, k=_KM_K, iters=_KM_ITERS)
     return assigned
 
@@ -3628,7 +3635,7 @@ _NS_K, _NS_BANDS, _NS_TH = 8, 4, 0.5
 def _near_store_parts(spark: SparkSession, sf_dir: str):
     from .operators.dedup import minhash_signatures
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     store_docs = docs.filter(F.col("doc_id") % 3 == 0)
     new_docs = docs.filter(F.col("doc_id") % 3 != 0)
     store_sigs = minhash_signatures(store_docs, k=_NS_K, fast=False)
@@ -3724,7 +3731,7 @@ def _d_near_store_fast_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     values, so the portable d_near_dedup_store carries the exact oracle."""
     from .operators.dedup import near_dedup_against_store, minhash_signatures
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     store_sigs = minhash_signatures(
         docs.filter(F.col("doc_id") % 3 == 0), k=16, fast=True
     )
@@ -3769,7 +3776,7 @@ _G_ABS_RE = "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)"
 
 
 def _g_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_spread(spark, f"{sf_dir}/documents.parquet").selectExpr(
+    return _table(spark, sf_dir, "documents_spread").selectExpr(
         "doc_id", f"{_G_URL} AS url", f"CAST({_G_HTML} AS BINARY) AS html"
     )
 
@@ -3895,9 +3902,7 @@ _G_BLOCK_URL = (
 def _g_blocklist_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.webgraph import blocklist_filter
 
-    pages = read_spread(spark, f"{sf_dir}/documents.parquet").selectExpr(
-        "doc_id", f"{_G_BLOCK_URL} AS url"
-    )
+    pages = _table(spark, sf_dir, "documents_spread").selectExpr("doc_id", f"{_G_BLOCK_URL} AS url")
     blocked = spark.createDataFrame(
         [("badhost.example",), ("host3.example.org",)], "domain string"
     )
@@ -3925,7 +3930,7 @@ def _g_latest_snapshot_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (max ts, id tiebreak) vs url_dedup's provenance convention (min id)."""
     from .operators.webgraph import latest_snapshot_dedup
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     g = F.floor(d / 3).cast("bigint")
     host = F.concat(F.lit("example"), (g % 20).cast("string"), F.lit(".com"))
@@ -4002,12 +4007,10 @@ def _g_crawl_diff_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalizer's own behavior is pinned by d_url_dedup)."""
     from .operators.webgraph import crawl_diff
 
-    # bare scan (r6 A/B): spreading each side's (url, text, id) rows measured
+    # bare view (r6 A/B): spreading each side's (url, text, id) rows measured
     # 2x SLOWER than the single-task scan at sf0.1 (0.57s -> 1.31s) — the
     # exchange ships the text payload to parallelize one md5
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
-        "doc_id", f"{_G_URL} AS url", "text"
-    )
+    docs = _table(spark, sf_dir, "documents").selectExpr("doc_id", f"{_G_URL} AS url", "text")
     prev = docs.filter(F.col("doc_id") % 5 != 4)
     curr = docs.filter(F.col("doc_id") % 5 != 0).withColumn(
         "text",
@@ -4233,7 +4236,7 @@ def _g_html_text_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     /non-empty — the WARC->WET step every web corpus pipeline starts from."""
     from .operators.webgraph import html_to_text
 
-    pages = read_spread(spark, f"{sf_dir}/documents.parquet").selectExpr(
+    pages = _table(spark, sf_dir, "documents_spread").selectExpr(
         "doc_id", f"CAST({_G_WET_HTML} AS BINARY) AS html"
     )
     return html_to_text(pages)
@@ -4298,12 +4301,7 @@ def _g_wet_curate_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     without the checkpoint Spark re-runs the whole WET regex chain per
     consumer — the shared-subtree trap.  Checkpointed, the html corpus is
     scanned and converted exactly once (plan-tested)."""
-    from .operators.webgraph import html_to_text
-
-    pages = read_spread(spark, f"{sf_dir}/documents.parquet").selectExpr(
-        "doc_id", f"CAST({_G_WET_HTML} AS BINARY) AS html"
-    )
-    wet = html_to_text(pages).select("doc_id", "text").localCheckpoint(eager=False)
+    wet = _g_html_text_fn(spark, sf_dir).select("doc_id", "text").localCheckpoint(eager=False)
     return _curate_funnel(wet)
 
 
@@ -4319,7 +4317,7 @@ ORACLES["g_wet_curate"] = _t_curate_duck(
 def _t_ccnet_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import ccnet_buckets
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return ccnet_buckets(docs)
 
 
@@ -4385,7 +4383,7 @@ _CCNET_MIX = {"head": 1.0, "middle": 0.5, "tail": 0.1}
 def _t_ccnet_mix_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import ccnet_mixture
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return ccnet_mixture(docs, weights=_CCNET_MIX)
 
 
@@ -4416,7 +4414,7 @@ def _a_hll_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.sketches import hll_distinct
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return hll_distinct(docs, F.col("text"), p=12)
 
 
@@ -4463,7 +4461,7 @@ ORACLES["a_hll_distinct"] = _a_hll_duck()
 def _t_pack_shards_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import pack_shards
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     return pack_shards(docs, seq_len=512, num_parts=8)
 
 
@@ -4521,7 +4519,7 @@ ORACLES["t_pack_shards"] = _t_pack_shards_duck()
 def _t_inverted_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.indexing import inverted_postings
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     return inverted_postings(docs, max_postings=16)
 
 
@@ -4555,7 +4553,7 @@ _BM25_TERMS = ["spark", "filter", "window"]
 def _t_bm25_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.indexing import bm25_topk
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     return bm25_topk(docs, _BM25_TERMS, k=10)
 
 
@@ -4604,7 +4602,7 @@ def _a_cm_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sketches import cm_estimate, cm_sketch
     from .operators.textstats import normalize_for_fingerprint
 
-    docs = read_spread(spark, f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents_spread")
     toks = (
         docs.select(
             F.explode(
@@ -4751,9 +4749,7 @@ ORACLES["g_robots_filter"] = _g_robots_duck()
 def _g_dup_ratio_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.webgraph import host_dup_ratio
 
-    pages = read_spread(spark, f"{sf_dir}/documents.parquet").selectExpr(
-        f"{_G_URL} AS url", "text"
-    )
+    pages = _table(spark, sf_dir, "documents_spread").selectExpr(f"{_G_URL} AS url", "text")
     return host_dup_ratio(pages)
 
 
@@ -4790,12 +4786,8 @@ def _g_crawl_shards_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     same shared-subtree trap as g_wet_curate); the survivor stream feeds
     pack_shards' single stream-window consumer directly."""
     from .operators.curation import pack_shards
-    from .operators.webgraph import html_to_text
 
-    pages = read_spread(spark, f"{sf_dir}/documents.parquet").selectExpr(
-        "doc_id", f"CAST({_G_WET_HTML} AS BINARY) AS html"
-    )
-    wet = html_to_text(pages).select("doc_id", "text").localCheckpoint(eager=False)
+    wet = _g_html_text_fn(spark, sf_dir).select("doc_id", "text").localCheckpoint(eager=False)
     surv = _curate_survivors(wet).select("doc_id", "text")
     return pack_shards(surv, seq_len=256, num_parts=4)
 

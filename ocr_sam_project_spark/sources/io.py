@@ -106,10 +106,11 @@ def read_spread(spark: SparkSession, path: str) -> DataFrame:
     many-file input reads no footer and gets no Exchange.
 
     A driver-side probe (a first() row, a centroid sample) or a small
-    broadcast/probe-side input reads the bare scan instead (in queries.py,
-    the registered view via `_bare`): over this frame the probe would run
-    the whole round-robin shuffle to fetch a few rows, and the side input
-    would add a second Exchange."""
+    broadcast/probe-side input reads the bare scan instead: over this
+    frame the probe would run the whole round-robin shuffle to fetch a few
+    rows, and the side input would add a second Exchange.  `queries._load`
+    registers both layouts of a query table once per session, as the
+    views `t` and `t_spread`."""
     df = spark.read.parquet(path)
     cores = spark.sparkContext.defaultParallelism
     return df.repartition(cores) if _row_groups_below(path, cores) else df

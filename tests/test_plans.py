@@ -776,6 +776,29 @@ def test_operator_build_runs_no_job(spark, anti_joined, name):
     assert sc.statusTracker().getJobIdsForGroup(group) == [], name
 
 
+def test_queries_read_only_registered_views(spark, monkeypatch):
+    """Every registered query reads its tables through the views that
+    `queries._load` registered: once they are registered, a query fn that
+    lists or reads a parquet path itself fails to build."""
+    from pyspark.sql import DataFrameReader
+
+    from test_oracle_parity import SF_DIR as sf_dir
+
+    from ocr_sam_project_spark import queries
+    from ocr_sam_project_spark.sources import io
+
+    queries._load(spark, sf_dir)
+
+    def no_path_read(*args, **kwargs):
+        raise AssertionError("a query read a parquet path, not a registered view")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_path_read)
+    monkeypatch.setattr(io, "read_spread", no_path_read)
+    monkeypatch.setattr(queries, "read_spread", no_path_read)
+    for name, fn in queries.QUERY_FNS.items():
+        assert fn(spark, sf_dir) is not None, name
+
+
 def test_robots_filter_is_one_narrow_pass(spark, pages_parquet):
     """robots_filter scans its pages once: the per-host rule lists join
     onto the pages by host, so the executed plan holds no Union, no
@@ -819,7 +842,12 @@ def test_drop_pass_is_lazy_and_ships_no_text(spark, pages_parquet, tmp_path):
     until it is executed, and none of its Exchanges outputs the page text
     or html: the tiers shuffle only the narrow (url, part_id, fp) frame,
     even where the robots rules (a LogicalRDD without a size statistic)
-    plan a shuffle join."""
+    plan a shuffle join.  Each hash Exchange (the robots rule aggregate,
+    the canonical-url, fp and url windows) runs once: the store probe reads
+    the frame as first selected, not the tier chain a second time."""
+    import re
+    from collections import defaultdict
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -856,9 +884,14 @@ def test_drop_pass_is_lazy_and_ships_no_text(spark, pages_parquet, tmp_path):
     exchanges = [n for n in _plan_nodes(ledger._jdf.queryExecution().executedPlan())
                  if "Exchange" in n.nodeName() and n.nodeName() != "ReusedExchange"]
     assert exchanges
+    runs = defaultdict(set)
     for ex in exchanges:
         cols = {a.name() for a in (ex.output().apply(i) for i in range(ex.output().size()))}
         assert not cols & {"text", "html"}, ex.toString()
+        keys = re.sub(r"#\d+", "", ex.outputPartitioning().toString())
+        if keys.startswith("hashpartitioning"):
+            runs[keys].add(ex.id())
+    assert len(runs) >= 4 and all(len(ids) == 1 for ids in runs.values()), dict(runs)
 
 
 def test_no_tier_ledger_reads_only_url(spark, pages_parquet):
@@ -880,7 +913,7 @@ def test_no_tier_ledger_reads_only_url(spark, pages_parquet):
 def test_job_write_observes_stats_above_the_shuffle(spark, pages_parquet, tmp_path):
     """The job's per-part segment, error and PII counts ride the write:
     in the executed write plan the CollectMetrics node sits above the
-    `repartition` Exchange, in the result stage.  Below it, in a map stage,
+    `repartitionById` Exchange, in the result stage.  Below it, in a map stage,
     a retried stage would apply its tasks' metric updates again."""
     from ocr_sam_project_spark.pipeline.job import run_extraction_job
 
@@ -896,4 +929,5 @@ def test_job_write_observes_stats_above_the_shuffle(spark, pages_parquet, tmp_pa
     assert "CollectMetrics" in ops and "Exchange" in ops, plan
     assert ops.index("CollectMetrics") < ops.index("Exchange"), plan
     exchange = tree[ops.index("Exchange")].rsplit("(", 1)[1].rstrip(")")
-    assert "hashpartitioning(part_id" in plan.split(f"({exchange}) Exchange")[1].split("\n\n")[0]
+    assert ("shufflepartitionidpassthrough(direct_shuffle_partition_id(part_id"
+            in plan.split(f"({exchange}) Exchange")[1].split("\n\n")[0])
